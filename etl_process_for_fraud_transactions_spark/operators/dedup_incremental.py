@@ -77,6 +77,7 @@ from .dedup import (
     shingles,
 )
 from .graph import dedup_components
+from .store import IndexStore
 
 
 #: Partition column carrying the epoch/batch stamp in partitioned mode.
@@ -154,22 +155,39 @@ class NearDupIndex:
         self.store = store
         self.partitioned = partitioned
         self.broadcast_max_rows = broadcast_max_rows
+        #: unversioned only; a full compaction purges tombstones in
+        #: place — sound WITHOUT a version flip because no derived
+        #: statistic subtracts them (IndexStore's purge_in_place)
+        self._store = IndexStore(
+            wh,
+            "NearDupIndex",
+            name,
+            ("buckets", "shingles"),
+            id_col,
+            meta_ddl=(
+                "k int, num_hashes int, bands int, portable boolean, "
+                "store string, partitioned boolean, "
+                "compacted_through long"
+            ),
+            meta_defaults={"store": "raw", "partitioned": False},
+            purge_in_place=True,
+        )
 
     @property
     def buckets_table(self) -> str:
-        return f"{self.name}_buckets"
+        return self._store.table("buckets")
 
     @property
     def shingles_table(self) -> str:
-        return f"{self.name}_shingles"
+        return self._store.table("shingles")
 
     @property
     def meta_table(self) -> str:
-        return f"{self.name}_meta"
+        return self._store.meta_table
 
     @property
     def tombstones_table(self) -> str:
-        return f"{self.name}_tombstones"
+        return self._store.tombstones()
 
     def _params(self) -> dict:
         return {
@@ -181,58 +199,25 @@ class NearDupIndex:
             "partitioned": self.partitioned,
         }
 
-    def _write_meta(self, compacted_through: int | None = None) -> None:
-        # compacted_through (round 13, operators/epochs.py) is the
-        # replay watermark — persisted BEFORE compact()'s data swap;
-        # bootstrap() writes the default None, resetting the lineage
-        # (a re-bootstrap starts a fresh epoch history)
-        row = [
-            tuple(self._params().values())
-            + (
-                None
-                if compacted_through is None
-                else int(compacted_through),
-            )
-        ]
-        self.wh.overwrite_rows(
-            self.meta_table,
-            row,
-            "k int, num_hashes int, bands int, portable boolean, "
-            "store string, partitioned boolean, "
-            "compacted_through long",
-        )
-
-    def _watermark(self) -> int | None:
-        """The replay watermark (None = never compacted); legacy metas
-        lack the column — such stores were never compacted."""
-        if not self.wh.exists(self.meta_table):
-            return None
-        wm = self.wh.read_rows(self.meta_table)[0].get("compacted_through")
-        return None if wm is None else int(wm)
-
     def _validate_params(self) -> None:
         """Candidates from mismatched hash families silently vanish, so
         a store bootstrapped under different LSH parameters is a
         correctness bug, not a tuning choice — fail loudly."""
         if getattr(self, "_params_ok", False):
             return
-        if not self.wh.exists(self.meta_table):
-            # pre-meta store (or external writer): nothing to check
-            self._params_ok = True
-            return
-        stored = self.wh.read_rows(self.meta_table)[0]
-        # metas written before these parameters existed take defaults;
-        # the compaction watermark is layout metadata, not identity
-        stored = {"store": "raw", "partitioned": False, **stored}
-        stored.pop("compacted_through", None)
-        mine = self._params()
-        if stored != mine:
-            raise ValueError(
-                f"NearDupIndex '{self.name}' was built with {stored}, "
-                f"but this instance uses {mine} — candidates from "
-                "mismatched hash families silently vanish; rebuild the "
-                "index or match its parameters"
-            )
+        stored = self._store.meta()
+        # pre-meta store (or external writer): nothing to check; the
+        # compaction watermark is layout metadata, not identity
+        if stored is not None:
+            stored.pop("compacted_through", None)
+            mine = self._params()
+            if stored != mine:
+                raise ValueError(
+                    f"NearDupIndex '{self.name}' was built with {stored}, "
+                    f"but this instance uses {mine} — candidates from "
+                    "mismatched hash families silently vanish; rebuild "
+                    "the index or match its parameters"
+                )
         self._params_ok = True
 
     def _buckets(self, docs: DataFrame) -> DataFrame:
@@ -343,7 +328,7 @@ class NearDupIndex:
                 lambda: self.wh.overwrite(self.buckets_table, b),
                 lambda: self.wh.overwrite(self.shingles_table, s),
             )
-        self._write_meta()
+        self._store.write_meta({**self._params(), "compacted_through": None})
         # a re-bootstrap's corpus is the caller's statement of record:
         # stale tombstones must not filter it. Removed LAST — a crash
         # beforehand leaves the new corpus OVER-filtered (safe for
@@ -383,7 +368,7 @@ class NearDupIndex:
         if batch is not None:
             guard_sentinel_batch(batch)
             if self.partitioned and replay_skippable(
-                batch, self._watermark()
+                batch, self._store.watermark()
             ):
                 return
         from .tombstones import anti_join_tombstones
@@ -445,40 +430,7 @@ class NearDupIndex:
         Returns {"deleted_ids": n} — ids actually tombstoned by THIS
         call."""
         self._validate_params()
-        if not self.wh.exists(self.buckets_table):
-            # day-zero store: nothing indexed, nothing to tombstone
-            return {"deleted_ids": 0}
-        new_tombs = (
-            self.wh.read(self.buckets_table)
-            .select(self.id_col)
-            .join(
-                # hint-free: a mass delete must not force-broadcast
-                # an unbounded caller frame (the erase_keys convention)
-                ids.select(self.id_col).distinct(),
-                self.id_col,
-                "left_semi",
-            )
-            .distinct()
-        )
-        if self.wh.exists(self.tombstones_table):
-            new_tombs = new_tombs.join(
-                self.wh.read(self.tombstones_table).select(self.id_col),
-                self.id_col,
-                "left_anti",
-            )
-        # r17 (VERDICT r16 item 5): gate count as an observed metric on
-        # the checkpoint materialization — the separate count() job is
-        # gone; see Bm25Index.delete for the full rationale.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new_tombs = new_tombs.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint()
-        n = obs.get["n"]
-        if n:
-            self.wh.append(self.tombstones_table, new_tombs)
-        return {"deleted_ids": int(n)}
+        return self._store.delete_ids(ids, "buckets")
 
     def compact(
         self,
@@ -506,123 +458,22 @@ class NearDupIndex:
 
         The watermark persists to the meta BEFORE the data swaps
         (epochs.py crash ordering: either crash side serves
-        correctly and re-running compact() converges).
+        correctly and re-running compact() converges). A FULL merge
+        applies the tombstones physically — sound here WITHOUT a
+        version flip because no derived statistic subtracts them
+        (see delete()) — and removes the tombstone table LAST; a
+        bounded merge leaves them live.
 
-        Returns {"stamps_merged", "compacted_through",
+        Returns {"stamps_merged", "compacted_through", "purged",
         "files_before", "files_after"}."""
-        from ..sources.warehouse import atomic_overwrite
-        from .epochs import (
-            SENTINEL_STAMPS,
-            collapse_epochs,
-            epoch_watermark,
-            parquet_file_count,
-        )
-
         self._validate_params()
-        if not self.partitioned:
-            raise ValueError(
-                f"NearDupIndex '{self.name}': compact() is "
-                "epoch-partition maintenance — only a partitioned=True "
-                "store accumulates __batch partitions"
-            )
-        if not self.wh.exists(self.meta_table):
-            raise ValueError(
-                f"NearDupIndex '{self.name}': no meta marker — run "
-                "bootstrap()"
-            )
-        prev_wm = self._watermark()
-        frames = {}
-        stamps: set = set()
-        for table in (self.buckets_table, self.shingles_table):
-            if not self.wh.exists(table):
-                continue  # day-zero bootstrap wrote no files
-            # cast up front: partition-type inference reads an
-            # all-numeric-epoch store's __batch as int, and the
-            # restamp-to-__compacted__ union must not mix types
-            df = self.wh.read(table).withColumn(
-                BATCH_COL, F.col(BATCH_COL).cast("string")
-            )
-            frames[table] = df
-            # stamp enumeration from the hive directory names (r16):
-            # the same distinct set, driver-side
-            from .epochs import hive_partition_values
-
-            stamps |= hive_partition_values(self.wh.path(table), BATCH_COL)
-        # integer-orderability over ALL stamps first (loud failure on
-        # ad-hoc bootstrap stamps), then the merge subset
-        epoch_watermark(stamps)
-        if live:
-            # live-stream mode: derive the bound from the scanned
-            # stamps — merge everything below the NEWEST integer
-            # epoch, which is the only one a crashed absorb may have
-            # left partially written (epochs.py)
-            if through is not None:
-                raise ValueError(
-                    "compact(live=True) derives its own bound — pass "
-                    "through= or live=True, not both"
-                )
-            ints = [int(s) for s in stamps if s not in SENTINEL_STAMPS]
-            through = max(ints) - 1 if ints else None
-        merged = sorted(
-            s
-            for s in stamps
-            if s in SENTINEL_STAMPS
-            or through is None
-            or int(s) <= int(through)
+        return self._store.compact(
+            {"buckets": [BATCH_COL], "shingles": [BATCH_COL]},
+            files_per_partition=files_per_partition,
+            through=through,
+            live=live,
+            partitioned=self.partitioned,
         )
-        wm = epoch_watermark(merged, prev_wm)
-        # physical deletion (round 13): a FULL merge applies the
-        # tombstones — sound here WITHOUT a version flip because no
-        # derived statistic subtracts them (see delete()): after the
-        # purged rewrite, a still-live tombstone filters rows that no
-        # longer exist (a no-op), so any crash ordering converges by
-        # re-running compact(). The tombstone table itself is removed
-        # LAST. A bounded merge keeps un-merged epochs' raw rows and
-        # leaves the tombstones live.
-        full = set(merged) == stamps
-        tombs = (
-            self.wh.read(self.tombstones_table)
-            if self.wh.exists(self.tombstones_table)
-            else None
-        )
-        purge = full and tombs is not None
-        files_before = sum(
-            parquet_file_count(self.wh.path(t)) for t in frames
-        )
-        # watermark FIRST (epochs.py crash ordering)
-        self._write_meta(compacted_through=wm)
-        for table, df in frames.items():
-            collapsed = collapse_epochs(
-                df.filter(F.col(BATCH_COL).isin(merged)),
-                BATCH_COL,
-                [BATCH_COL],
-                self.id_col,
-                files_per_partition,
-            ).unionByName(df.filter(~F.col(BATCH_COL).isin(merged)))
-            if purge:
-                # size-gated, like serving (ADVICE r13): a mass
-                # takedown followed by a full compaction must degrade
-                # to a shuffle anti-join, never a forced broadcast
-                from .tombstones import anti_join_tombstones
-
-                collapsed = anti_join_tombstones(
-                    collapsed, self.wh, self.tombstones_table,
-                    self.id_col,
-                )
-            atomic_overwrite(
-                collapsed, self.wh.path(table), partition_by=[BATCH_COL]
-            )
-        if purge:
-            self.wh.remove_table(self.tombstones_table)
-        return {
-            "stamps_merged": len(merged),
-            "compacted_through": wm,
-            "purged": purge,
-            "files_before": files_before,
-            "files_after": sum(
-                parquet_file_count(self.wh.path(t)) for t in frames
-            ),
-        }
 
     def _resolve_threshold(self, threshold: float | None) -> float:
         """None -> the auto_band_threshold the family was tuned for,
@@ -664,7 +515,7 @@ class NearDupIndex:
         if exclude_batch is not None:
             from .epochs import replay_skippable
 
-            if replay_skippable(exclude_batch, self._watermark()):
+            if replay_skippable(exclude_batch, self._store.watermark()):
                 raise ValueError(
                     f"NearDupIndex '{self.name}': epoch "
                     f"{exclude_batch!r} was merged by compaction "

@@ -1,6 +1,6 @@
-"""Epoch-partition maintenance shared by the index families.
+"""Epoch partitions and the compaction watermark: the semantics.
 
-Every partitioned index store (IvfIndex, PqIndex, Bm25Index,
+Every partitioned index store (Bm25Index, IvfIndex, PqIndex,
 NearDupIndex) absorbs streaming micro-batches as hive `__batch`
 partitions — the exactly-once contract: a replayed epoch is a dynamic
 partition overwrite of its own rows. The price at scale is the classic
@@ -10,15 +10,22 @@ files, and scan cost at 100 TB becomes file-open overhead plus a
 driver-side listing of millions of partition directories long before
 it is IO.
 
-`compact()` on each family is the maintenance answer: a pure LAYOUT
-rewrite (no retraining, no retokenizing — unlike a rebuild, which
-recomputes everything) that collapses all epoch partitions into one
-`__compacted__` stamp while preserving the leading pruning level
-(cell id / term bucket). Collapsing stamps destroys per-epoch replay
-targeting, so compaction records a `compacted_through` WATERMARK (the
-max integer epoch id merged) and `absorb()` skips any replayed epoch
-<= the watermark — its rows are already inside the compacted
-partition, and rewriting "its" partition would duplicate them.
+Compaction is the maintenance answer, implemented ONCE in
+`IndexStore.compact` (operators/store.py) — every family's compact()
+only names its tables and their partition columns. It is a pure
+LAYOUT rewrite (no retraining, no retokenizing — unlike a rebuild,
+which recomputes everything) that collapses the merged epoch
+partitions into one `__compacted__` stamp while preserving the leading
+pruning level (cell id / term bucket). Collapsing stamps destroys
+per-epoch replay targeting, so compaction records a
+`compacted_through` WATERMARK (the max integer epoch id merged) and
+`absorb()` skips any replayed epoch <= the watermark — its rows are
+already inside the compacted partition, and rewriting "its" partition
+would duplicate them. This module holds the pieces: stamp enumeration
+(`hive_partition_values`), the merge selection and watermark
+(`merge_selection`, `epoch_watermark`), the replay decision
+(`replay_skippable`, `guard_sentinel_batch`) and the rewrite plan
+(`collapse_epochs`).
 
 Watermark semantics, stated precisely:
 
@@ -52,6 +59,10 @@ Watermark semantics, stated precisely:
   (identical rows, nothing lost), and re-running compact() converges.
   Versioned stores need no ordering: the watermark rides the version
   pointer row and commits atomically with the collapsed tables.
+- Deletion: a FULL merge applies the tombstones physically — inside
+  the pointer flip on a versioned store; in place on a store with no
+  tombstone-derived statistics (NearDupIndex). A bounded merge keeps
+  un-merged epochs' raw rows, so the tombstones stay live.
 - A full rebuild (`build()` on an existing store) RESETS the
   watermark: the new version indexes a caller-supplied corpus under a
   fresh `__build__` stamp, so the old epoch lineage is meaningless —
@@ -101,6 +112,37 @@ def epoch_watermark(stamps, prev: int | None = None) -> int | None:
     if prev is not None:
         wm = prev if wm is None else max(wm, prev)
     return wm
+
+
+def merge_selection(
+    stamps, through: int | None = None, live: bool = False,
+    prev: int | None = None,
+) -> tuple[list[str], int | None, bool]:
+    """Which stamps a compaction merges: (merged, watermark, full).
+
+    Integer-orderability is checked over ALL `stamps` first (an ad-hoc
+    stamp raises — it cannot be ordered against `through` or the
+    watermark). Maintenance stamps always merge; integer epochs merge
+    when <= `through` (None = everything). `live=True` derives
+    `through = newest epoch - 1` — the newest epoch is the only one a
+    crashed absorb may have left partially written. The watermark is
+    folded monotonically over `prev`; `full` says every stamp merged
+    (the precondition for a physical tombstone purge)."""
+    epoch_watermark(stamps)
+    if live:
+        if through is not None:
+            raise ValueError(
+                "compact(live=True) derives its own bound — pass "
+                "through= or live=True, not both"
+            )
+        ints = [int(s) for s in stamps if s not in SENTINEL_STAMPS]
+        through = max(ints) - 1 if ints else None
+    merged = sorted(
+        s
+        for s in stamps
+        if s in SENTINEL_STAMPS or through is None or int(s) <= int(through)
+    )
+    return merged, epoch_watermark(merged, prev), set(merged) == set(stamps)
 
 
 def replay_skippable(batch, watermark: int | None) -> bool:

@@ -63,6 +63,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .epochs import guard_sentinel_batch, replay_skippable
+from .store import IndexStore
+from .tombstones import anti_join_tombstones
 
 __all__ = [
     "PqModel",
@@ -886,14 +888,28 @@ class PqIndex:
         #: rewrites exactly the same rows (the IvfIndex/Bm25Index
         #: exactly-once convention; pq_absorb_sink requires it)
         self.partitioned = partitioned
+        #: the pointer row's payload is the layout (_LAYOUT_FIELDS):
+        #: the version AND the layout that interprets its tables commit
+        #: in one row (ADVICE r12). The OPQ rotation is one more
+        #: per-version role beside the codebooks it belongs to.
+        self._store = IndexStore(
+            wh,
+            "PqIndex",
+            name,
+            ("codes", "codebooks", "cells", "rotation"),
+            id_col,
+            versioned=versioned,
+            meta_ddl=self._META_SCHEMA,
+            pointer_ddl=self._POINTER_SCHEMA,
+        )
 
     @property
     def version_table(self) -> str:
-        return f"{self.name}_version"
+        return self._store.pointer_table
 
     @property
     def meta_table(self) -> str:
-        return f"{self.name}_meta"
+        return self._store.meta_table
 
     #: layout-affecting fields committed ATOMICALLY with the version
     #: pointer (ADVICE r12: a reader pairing one version's tables with
@@ -904,70 +920,52 @@ class PqIndex:
         "partitioned", "default_nprobe", "compacted_through", "opq",
     )
 
-    def _version_row(self) -> tuple[int, dict | None]:
-        """(version, layout) from ONE read of the one-row pointer —
-        the Bm25Index._version_row pattern. `layout` is the dict of
-        layout-affecting fields committed with the flip, or None for
-        a legacy pre-round-13 pointer (version only), whose layout
-        falls back to the shared meta table."""
-        if not self.wh.exists(self.version_table):
-            raise ValueError(
-                f"PqIndex '{self.name}' is versioned but has no "
-                "version pointer — run build()"
-            )
-        # driver-side one-row read (r16): no Spark job — warehouse.read_rows
-        row = self.wh.read_rows(self.version_table)[0]
+    #: shared-meta schema (train_spec documents the sampled-training
+    #: provenance — "fraction=0.25 seed=pq" — or NULL for full-corpus)
+    _META_SCHEMA = (
+        "id_col string, vec_col string, m int, n_codes int, "
+        "dim int, versioned boolean, n_cells int, cell_col string, "
+        "residual boolean, train_spec string, partitioned boolean, "
+        "default_nprobe int, compacted_through long, opq boolean"
+    )
+
+    #: one-row version-pointer schema: the version, the layout that
+    #: interprets its tables, and the replay watermark
+    _POINTER_SCHEMA = (
+        "version int, n_cells int, cell_col string, "
+        "m int, n_codes int, dim int, residual boolean, "
+        "partitioned boolean, default_nprobe int, "
+        "compacted_through long, opq boolean"
+    )
+
+    def _layout(self, row: dict) -> dict | None:
+        """The layout fields of a head row, or None for a legacy
+        pre-round-13 pointer (version only), whose layout falls back
+        to the shared meta. Only keys PRESENT in the row enter the
+        layout overlay — fields that joined the pointer later
+        (partitioned r13, default_nprobe r13) must not clobber a meta
+        value with None when read against an older pointer;
+        'partitioned' is the exception: an explicit None there means
+        "fall back to the instance flag" in absorb, so it is always
+        surfaced."""
         if "n_cells" not in row:
-            return int(row["version"]), None
-        # only keys PRESENT in the row enter the layout overlay —
-        # fields that joined the pointer later (partitioned r13,
-        # default_nprobe r13) must not clobber a meta value with None
-        # when read against an older pointer; 'partitioned' is the
-        # exception: an explicit None there means "fall back to the
-        # instance flag" in absorb, so it is always surfaced
+            return None
         layout = {k: row[k] for k in self._LAYOUT_FIELDS if k in row}
         layout["residual"] = bool(layout.get("residual"))
-        if "partitioned" not in row:
-            layout["partitioned"] = None
-        return int(row["version"]), layout
-
-    def _current_version(self) -> int:
-        return self._version_row()[0]
-
-    def _version_or_none(self) -> int | None:
-        """Current pointer version, or None when no pointer exists —
-        the pre-flip maintenance-race probe (guard_pointer_unmoved)."""
-        if not self.wh.exists(self.version_table):
-            return None
-        return self._current_version()
-
-    def _table_names(
-        self, version: int | None = None
-    ) -> tuple[str, str, str]:
-        if not self.versioned:
-            return (
-                f"{self.name}_codes",
-                f"{self.name}_codebooks",
-                f"{self.name}_cells",
-            )
-        v = version if version is not None else self._current_version()
-        return (
-            f"{self.name}_codes_v{v}",
-            f"{self.name}_codebooks_v{v}",
-            f"{self.name}_cells_v{v}",
-        )
+        layout.setdefault("partitioned", None)
+        return layout
 
     @property
     def codes_table(self) -> str:
-        return self._table_names()[0]
+        return self._store.table("codes")
 
     @property
     def codebooks_table(self) -> str:
-        return self._table_names()[1]
+        return self._store.table("codebooks")
 
     @property
     def cells_table(self) -> str:
-        return self._table_names()[2]
+        return self._store.table("cells")
 
     def _params(
         self,
@@ -978,28 +976,33 @@ class PqIndex:
         residual: bool = False,
         train_spec: str | None = None,
         default_nprobe: int | None = None,
-        compacted_through: int | None = None,
         opq: bool = False,
-    ) -> tuple:
-        return (
-            self.id_col, self.vec_col, int(m), int(n_codes), int(dim),
-            self.versioned,
-            None if n_cells is None else int(n_cells),
-            self.cell_col,
-            bool(residual),
-            train_spec,
-            self.partitioned,
-            None if default_nprobe is None else int(default_nprobe),
-            None if compacted_through is None else int(compacted_through),
-            bool(opq),
-        )
+    ) -> dict:
+        return {
+            "id_col": self.id_col,
+            "vec_col": self.vec_col,
+            "m": int(m),
+            "n_codes": int(n_codes),
+            "dim": int(dim),
+            "versioned": self.versioned,
+            "n_cells": None if n_cells is None else int(n_cells),
+            "cell_col": self.cell_col,
+            "residual": bool(residual),
+            "train_spec": train_spec,
+            "partitioned": self.partitioned,
+            "default_nprobe": (
+                None if default_nprobe is None else int(default_nprobe)
+            ),
+            "compacted_through": None,
+            "opq": bool(opq),
+        }
 
     def _validate(self) -> dict:
-        if not self.wh.exists(self.meta_table):
+        stored = self._store.meta()
+        if stored is None:
             raise ValueError(
                 f"PqIndex '{self.name}': no meta marker — run build()"
             )
-        stored = self.wh.read_rows(self.meta_table)[0]
         mine = {
             "id_col": self.id_col,
             "vec_col": self.vec_col,
@@ -1026,29 +1029,16 @@ class PqIndex:
             )
         return stored
 
-    def _tombstones_table(self, version: int | None = None) -> str:
-        """Deletion tombstones (round 13): one id per deleted vector.
-        Per-version in versioned mode — a rebuild's fresh version
-        starts clean, and a purging compaction commits 'tombstones
-        applied' by not creating the table for the new version."""
-        if not self.versioned:
-            return f"{self.name}_tombstones"
-        v = version if version is not None else self._current_version()
-        return f"{self.name}_tombstones_v{v}"
-
-    def _resolve(self) -> tuple[dict, tuple[str, str, str], str]:
+    def _resolve(self):
         """Identity-validate against the shared meta, then resolve the
-        SERVING layout + table names (codes/codebooks/cells +
-        tombstones). In versioned mode the pointer is read exactly
-        ONCE and its layout fields override the shared meta — so the
-        tables AND the layout that interprets them (n_cells,
-        residual, ...) are mutually consistent even across a
-        concurrent rebuild flip (ADVICE r12: the old _table_names()
-        + _model() pair read the pointer twice)."""
+        SERVING state from ONE head read: (head, layout, {role: table},
+        tombstones). A versioned pointer's layout fields override the
+        shared meta — so the tables AND the layout that interprets
+        them (n_cells, residual, ...) are mutually consistent even
+        across a concurrent rebuild flip (ADVICE r12)."""
         stored = self._validate()
-        if not self.versioned:
-            return stored, self._table_names(), self._tombstones_table()
-        v, layout = self._version_row()
+        head = self._store.head()
+        layout = self._layout(head.row)
         if layout is not None:
             stored = {**stored, **layout}
             if (
@@ -1056,81 +1046,40 @@ class PqIndex:
                 and stored.get("cell_col") != self.cell_col
             ):
                 raise ValueError(
-                    f"PqIndex '{self.name}' version {v} was built "
-                    f"with cell_col={stored.get('cell_col')!r}, this "
-                    f"instance uses {self.cell_col!r}"
+                    f"PqIndex '{self.name}' version {head.version} was "
+                    f"built with cell_col={stored.get('cell_col')!r}, "
+                    f"this instance uses {self.cell_col!r}"
                 )
-        return stored, self._table_names(v), self._tombstones_table(v)
+        return (
+            head,
+            stored,
+            self._store.tables(head.version),
+            self._store.tombstones(head.version),
+        )
+
+    def _partitioned(self, stored: dict) -> bool:
+        """Write layout from the RESOLVED layout (atomic with the
+        version in versioned mode — a rebuild that changed
+        `partitioned` must not get epoch directories appended into a
+        flat layout, or vice versa); legacy pointers without the
+        field fall back to the instance flag."""
+        p = stored.get("partitioned")
+        return self.partitioned if p is None else bool(p)
 
     def _model(self, books_table: str | None = None) -> PqModel:
-        if books_table is None:
-            _, books_table, _ = self._table_names()
         # bounded m x n_codes rows: driver-side read, no Spark job
-        return PqModel.from_rows(self.wh.read_rows(books_table))
+        return PqModel.from_rows(
+            self.wh.read_rows(books_table or self._store.table("codebooks"))
+        )
 
-    @staticmethod
-    def _rotation_table_for(books_table: str) -> str:
-        """The OPQ rotation table is named alongside its version's
-        codebooks (derived from books_t, which came from the one
-        pointer read — rotation and codebooks can never split across
-        a concurrent rebuild flip)."""
-        return books_table.replace("_codebooks", "_rotation")
-
-    def _rotation(self, books_table: str | None = None) -> tuple:
-        """Load the frozen d x d OPQ rotation (bounded: d rows)."""
-        if books_table is None:
-            _, books_table, _ = self._table_names()
-        rows = self.wh.read_rows(self._rotation_table_for(books_table))
+    def _rotation(self, rot_table: str | None = None) -> tuple:
+        """Load the frozen d x d OPQ rotation (bounded: d rows). Callers
+        pass the rotation table from the same resolution as the
+        codebooks, so the two never split across a rebuild flip."""
+        rows = self.wh.read_rows(rot_table or self._store.table("rotation"))
         return tuple(
             tuple(float(x) for x in r["r"])
             for r in sorted(rows, key=lambda x: x["i"])
-        )
-
-    #: shared-meta schema (train_spec documents the sampled-training
-    #: provenance — "fraction=0.25 seed=pq" — or NULL for full-corpus)
-    _META_SCHEMA = (
-        "id_col string, vec_col string, m int, n_codes int, "
-        "dim int, versioned boolean, n_cells int, cell_col string, "
-        "residual boolean, train_spec string, partitioned boolean, "
-        "default_nprobe int, compacted_through long, opq boolean"
-    )
-
-    #: one-row version-pointer schema — every pointer write (build,
-    #: calibrate_nprobe, compact) goes through _write_pointer so the
-    #: positional row can never drift from it
-    _POINTER_SCHEMA = (
-        "version int, n_cells int, cell_col string, "
-        "m int, n_codes int, dim int, residual boolean, "
-        "partitioned boolean, default_nprobe int, "
-        "compacted_through long, opq boolean"
-    )
-
-    def _write_pointer(self, version: int, layout: dict) -> None:
-        """Overwrite the one-row version pointer: the version AND the
-        layout that interprets its tables (plus the replay watermark)
-        commit in this single row (ADVICE r12)."""
-        dn = layout.get("default_nprobe")
-        wm = layout.get("compacted_through")
-        self.wh.overwrite_rows(
-            self.version_table,
-            [(
-                int(version),
-                (
-                    None
-                    if layout.get("n_cells") is None
-                    else int(layout["n_cells"])
-                ),
-                layout.get("cell_col"),
-                int(layout["m"]),
-                int(layout["n_codes"]),
-                int(layout["dim"]),
-                bool(layout.get("residual")),
-                layout.get("partitioned"),
-                None if dn is None else int(dn),
-                None if wm is None else int(wm),
-                bool(layout.get("opq")),
-            )],
-            self._POINTER_SCHEMA,
         )
 
     def build(
@@ -1336,31 +1285,11 @@ class PqIndex:
                 train_fraction=train_fraction, train_rows=train_rows,
                 sample_id_col=self.id_col,
             )
-        if self.versioned:
-            new_v = (
-                self._current_version() + 1
-                if self.wh.exists(self.version_table)
-                else 1
-            )
-            codes_t, books_t, cells_t = self._table_names(new_v)
-            # snapshot the CURRENT version's file inventory — the
-            # pre-flip guard below refuses if a concurrent
-            # absorb/delete lands in v(new_v-1) mid-rebuild
-            # (VERDICT r15 #1)
-            from ..sources.warehouse import table_inventory
-
-            cur_guard_tables = (
-                (
-                    self._table_names(new_v - 1)[0],
-                    self._tombstones_table(new_v - 1),
-                )
-                if new_v > 1
-                else ()
-            )
-            pre_inv = table_inventory(self.wh, cur_guard_tables)
-        else:
-            new_v = None
-            codes_t, books_t, cells_t = self._table_names()
+        # snapshot the CURRENT version's file inventory — the commit
+        # refuses if a concurrent absorb/delete lands in it mid-rebuild
+        # (VERDICT r15 #1)
+        flip = self._store.begin("build")
+        t = flip.tables
         encode_src = (
             corpus.drop(train_col) if residual else corpus
         )
@@ -1372,43 +1301,35 @@ class PqIndex:
         if self.partitioned:
             encoded = encoded.withColumn("__batch", F.lit("__build__"))
             parts.append("__batch")
-        if self.versioned:
-            # EARLY maintenance-race check before the first write into
-            # the shared v(new_v) paths (see guard_pointer_unmoved)
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), new_v - 1 if new_v > 1 else None,
-                f"PqIndex('{self.name}').build",
-            )
+        flip.before_write()
         atomic_overwrite(
             encoded,
-            self.wh.path(codes_t),
+            self.wh.path(t["codes"]),
             partition_by=parts or None,
         )
         # bounded literal table (m x n_codes rows): driver-side write
         self.wh.overwrite_rows(
-            books_t,
+            t["codebooks"],
             model.rows(),
             "sub_space int, code int, centroid array<double>",
         )
         if rotation is not None:
             self.wh.overwrite_rows(
-                self._rotation_table_for(books_t),
+                t["rotation"],
                 [
                     (i, [float(x) for x in row])
                     for i, row in enumerate(rotation)
                 ],
                 "i int, r array<double>",
             )
-        elif not self.versioned:
+        else:
             # a non-OPQ rebuild of a store that previously carried a
             # rotation must not leave the stale table behind (the
             # layout flag is the authority, but a half-truth on disk
             # invites an external reader to misuse it)
-            self.wh.remove_table(self._rotation_table_for(books_t))
+            self.wh.remove_table(t["rotation"])
         if n_cells is not None:
-            self.wh.overwrite(cells_t, cents)
+            self.wh.overwrite(t["cells"], cents)
         default_nprobe = None
         if nprobe_recall_target is not None:
             if n_cells is None:
@@ -1429,70 +1350,44 @@ class PqIndex:
                 ),
                 recall_target=nprobe_recall_target,
                 seed=seed,
-                _tables=(codes_t, books_t, cells_t),
+                _tables=t,
                 _layout={"residual": bool(residual)},
             )["default_nprobe"]
-        if self.versioned:
-            # pre-flip re-check: refuse (loudly, pointer untouched) if
-            # a concurrent absorb/delete landed in the current version
-            # after the snapshot above (VERDICT r15 #1)
-            from ..sources.warehouse import guard_concurrent_writes
-
-            guard_concurrent_writes(
-                self.wh, cur_guard_tables, pre_inv,
-                f"PqIndex('{self.name}').build",
-            )
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), new_v - 1 if new_v > 1 else None,
-                f"PqIndex('{self.name}').build",
-            )
-            # the commit point: the new version AND the layout that
-            # interprets its tables become visible in ONE row. The
-            # replay watermark RESETS — a rebuild indexes a fresh
-            # corpus under a fresh __build__ stamp, so the old epoch
-            # lineage is meaningless (epochs.py: restart the stream
-            # from a fresh checkpoint after a rebuild)
-            self._write_pointer(
-                new_v,
-                {
-                    "n_cells": n_cells,
-                    "cell_col": self.cell_col,
-                    "m": model.m,
-                    "n_codes": model.n_codes,
-                    "dim": model.dim,
-                    "residual": residual,
-                    "partitioned": bool(self.partitioned),
-                    "default_nprobe": default_nprobe,
-                    "compacted_through": None,
-                    "opq": rotation is not None,
-                },
-            )
+        # the commit point: the new version AND the layout that
+        # interprets its tables become visible in ONE row. The replay
+        # watermark RESETS — a rebuild indexes a fresh corpus under a
+        # fresh __build__ stamp, so the old epoch lineage is
+        # meaningless (epochs.py: restart the stream from a fresh
+        # checkpoint after a rebuild)
+        flip.commit({
+            "n_cells": n_cells,
+            "cell_col": self.cell_col,
+            "m": model.m,
+            "n_codes": model.n_codes,
+            "dim": model.dim,
+            "residual": bool(residual),
+            "partitioned": bool(self.partitioned),
+            "default_nprobe": default_nprobe,
+            "compacted_through": None,
+            "opq": rotation is not None,
+        })
         # shared meta LAST in versioned mode (pre-flip readers keep a
         # consistent old-version view; the meta is the commit marker
         # only for the non-versioned layout)
-        self.wh.overwrite_rows(
-            self.meta_table,
-            [
-                self._params(
-                    model.m, model.n_codes, model.dim, n_cells,
-                    residual=residual, train_spec=train_spec,
-                    default_nprobe=default_nprobe,
-                    opq=rotation is not None,
-                )
-            ],
-            self._META_SCHEMA,
+        self._store.write_meta(
+            self._params(
+                model.m, model.n_codes, model.dim, n_cells,
+                residual=residual, train_spec=train_spec,
+                default_nprobe=default_nprobe,
+                opq=rotation is not None,
+            )
         )
-        if not self.versioned:
-            # a rebuild's corpus is the caller's statement of record:
-            # stale tombstones must not filter it. Removed LAST — a
-            # crash beforehand leaves the new corpus OVER-filtered
-            # (safe for takedowns, converges on re-run), never an
-            # un-filtered window for deleted vectors. Versioned
-            # rebuilds get this atomically: the new version has no
-            # tombstone table at all.
-            self.wh.remove_table(self._tombstones_table())
+        # a rebuild's corpus is the caller's statement of record:
+        # stale tombstones must not filter it. Removed LAST — a crash
+        # beforehand leaves the new corpus OVER-filtered (safe for
+        # takedowns, converges on re-run), never an un-filtered window
+        # for deleted vectors (a fresh version normally has none)
+        self.wh.remove_table(flip.tombstones)
         return model
 
     def absorb(self, new_vectors: DataFrame, batch=None) -> None:
@@ -1517,24 +1412,14 @@ class PqIndex:
         no-ops instead of duplicating them. A batch id colliding with
         a maintenance stamp is always refused (it would
         dynamic-overwrite the build or compacted partition itself)."""
-        stored, (codes_t, books_t, cells_t), tomb_t = self._resolve()
-        # write mode follows the RESOLVED layout (atomic with the
-        # version in versioned mode — a rebuild that changed
-        # `partitioned` must not get epoch directories appended into a
-        # flat layout, or vice versa); legacy pointers without the
-        # field fall back to the instance flag
-        partitioned = stored.get("partitioned")
-        partitioned = (
-            self.partitioned if partitioned is None else bool(partitioned)
-        )
+        head, stored, t, tomb_t = self._resolve()
+        partitioned = self._partitioned(stored)
         if batch is not None:
             guard_sentinel_batch(batch)
             if partitioned and replay_skippable(
                 batch, stored.get("compacted_through")
             ):
                 return
-        from .tombstones import anti_join_tombstones
-
         # a deleted id stays deleted until a purging compaction: the
         # ban is a size-gated anti-join against the tombstone id set
         # — deterministic, so replays converge
@@ -1546,7 +1431,7 @@ class PqIndex:
         if stored.get("n_cells") is not None:
             from .similarity import cosine
 
-            cents = self.wh.read(cells_t)
+            cents = self.wh.read(t["cells"])
             # assignment is per ROW, not per id: partitioning the
             # argmax window by id_col would silently drop all but one
             # row of a batch that repeats an id (round-13 self-review;
@@ -1576,10 +1461,10 @@ class PqIndex:
             else:
                 frame = frame.drop("centroid")
         encoded = pq_encode(
-            frame, self._model(books_t), self.vec_col,
+            frame, self._model(t["codebooks"]), self.vec_col,
             center_col=center_col,
             rotation=(
-                self._rotation(books_t) if stored.get("opq") else None
+                self._rotation(t["rotation"]) if stored.get("opq") else None
             ),
         )
         parts = (
@@ -1591,7 +1476,7 @@ class PqIndex:
                     "a partitioned index requires a batch id for absorb()"
                 )
             self.wh.append_partitioned(
-                codes_t,
+                t["codes"],
                 encoded.withColumn("__batch", F.lit(str(batch))),
                 parts + ["__batch"],
             )
@@ -1605,10 +1490,10 @@ class PqIndex:
             # the append must keep the hive cell layout — a root-level
             # file in a partitioned table corrupts partition discovery
             encoded.write.mode("append").partitionBy(*parts).parquet(
-                self.wh.path(codes_t)
+                self.wh.path(t["codes"])
             )
         else:
-            self.wh.append(codes_t, encoded)
+            self.wh.append(t["codes"], encoded)
 
     def delete(self, ids: DataFrame) -> dict:
         """Tombstone vectors (round 13 — deletion propagation, the
@@ -1623,38 +1508,8 @@ class PqIndex:
 
         Returns {"deleted_ids": n} — ids actually tombstoned by THIS
         call."""
-        stored, (codes_t, _, _), tomb_t = self._resolve()
-        new_tombs = (
-            self.wh.read(codes_t)
-            .select(self.id_col)
-            .join(
-                # hint-free: a mass delete must not force-broadcast
-                # an unbounded caller frame (the erase_keys convention)
-                ids.select(self.id_col).distinct(),
-                self.id_col,
-                "left_semi",
-            )
-            .distinct()
-        )
-        if self.wh.exists(tomb_t):
-            new_tombs = new_tombs.join(
-                self.wh.read(tomb_t).select(self.id_col),
-                self.id_col,
-                "left_anti",
-            )
-        # r17 (VERDICT r16 item 5): gate count as an observed metric on
-        # the checkpoint materialization — the separate count() job is
-        # gone; see Bm25Index.delete for the full rationale.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new_tombs = new_tombs.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint()
-        n = obs.get["n"]
-        if n:
-            self.wh.append(tomb_t, new_tombs)
-        return {"deleted_ids": int(n)}
+        head, _, _, _ = self._resolve()
+        return self._store.delete_ids(ids, "codes", head.version)
 
     def compact(
         self,
@@ -1687,203 +1542,29 @@ class PqIndex:
         Non-versioned stores persist the watermark (in the shared
         meta) BEFORE the data swap — either crash side is correct
         (epochs.py); versioned stores write the collapsed codes off
-        to the side and commit watermark + layout in the one pointer
-        flip.
+        to the side, carry codebooks, cells and rotation as byte
+        copies, and commit watermark + the unchanged layout in the
+        one pointer flip.
 
-        Returns {"stamps_merged", "compacted_through",
+        Returns {"stamps_merged", "compacted_through", "purged",
         "files_before", "files_after"}."""
-        from ..sources.warehouse import atomic_overwrite
-        from .epochs import (
-            SENTINEL_STAMPS,
-            collapse_epochs,
-            epoch_watermark,
-            parquet_file_count,
+        # ONE head read drives the whole compaction: the tables
+        # rewritten, the layout republished, and the previous
+        # watermark all come from this row
+        head, stored, _, _ = self._resolve()
+        cells = [] if stored.get("n_cells") is None else [self.cell_col]
+        return self._store.compact(
+            {"codes": cells + ["__batch"]},
+            files_per_partition=files_per_partition,
+            through=through,
+            live=live,
+            partitioned=self._partitioned(stored),
+            head=head,
+            payload={
+                **{k: stored.get(k) for k in self._LAYOUT_FIELDS},
+                "partitioned": True,
+            },
         )
-
-        meta = self._validate()
-        stored = meta
-        layout = None
-        if self.versioned:
-            # ONE pointer read drives the whole compaction: the tables
-            # rewritten, the layout republished, and the previous
-            # watermark all come from this row
-            v, layout = self._version_row()
-            if layout is not None:
-                stored = {**stored, **layout}
-            cur_codes, cur_books, cur_cells = self._table_names(v)
-            new_codes, new_books, new_cells = self._table_names(v + 1)
-            cur_tomb = self._tombstones_table(v)
-            new_tomb = self._tombstones_table(v + 1)
-            # snapshot the current version's file inventory before any
-            # reads — the pre-flip guard refuses if a concurrent
-            # absorb/delete lands mid-compaction (VERDICT r15 #1)
-            from ..sources.warehouse import table_inventory
-
-            cur_guard_tables = (cur_codes, cur_tomb)
-            pre_inv = table_inventory(self.wh, cur_guard_tables)
-        else:
-            cur_codes = new_codes = self._table_names()[0]
-            cur_books = new_books = self._table_names()[1]
-            cur_cells = new_cells = self._table_names()[2]
-            cur_tomb = new_tomb = self._tombstones_table()
-        tombs = (
-            self.wh.read(cur_tomb) if self.wh.exists(cur_tomb) else None
-        )
-        partitioned = stored.get("partitioned")
-        partitioned = (
-            self.partitioned if partitioned is None else bool(partitioned)
-        )
-        if not partitioned:
-            raise ValueError(
-                f"PqIndex '{self.name}': compact() is epoch-partition "
-                "maintenance — only a partitioned=True store "
-                "accumulates __batch partitions"
-            )
-        prev_wm = stored.get("compacted_through")
-        prev_wm = None if prev_wm is None else int(prev_wm)
-        # partition-type inference reads an all-numeric-epoch store's
-        # __batch as int; cast up front so the restamp union can't mix
-        # types (and collected stamps compare as strings)
-        codes = self.wh.read(cur_codes).withColumn(
-            "__batch", F.col("__batch").cast("string")
-        )
-        # stamp enumeration from the hive directory names (r16): the
-        # same distinct set, driver-side — epochs.hive_partition_values
-        from .epochs import hive_partition_values
-
-        stamps = hive_partition_values(self.wh.path(cur_codes), "__batch")
-        # integer-orderability over ALL stamps first (loud failure on
-        # ad-hoc ids), then the merge subset and its watermark
-        epoch_watermark(stamps)
-        if live:
-            # live-stream mode: derive the bound from the scanned
-            # stamps — merge everything below the NEWEST integer
-            # epoch, which is the only one a crashed absorb may have
-            # left partially written (epochs.py)
-            if through is not None:
-                raise ValueError(
-                    "compact(live=True) derives its own bound — pass "
-                    "through= or live=True, not both"
-                )
-            ints = [int(s) for s in stamps if s not in SENTINEL_STAMPS]
-            through = max(ints) - 1 if ints else None
-        merged = sorted(
-            s
-            for s in stamps
-            if s in SENTINEL_STAMPS
-            or through is None
-            or int(s) <= int(through)
-        )
-        wm = epoch_watermark(merged, prev_wm)
-        # physical deletion (round 13): a FULL merge on a VERSIONED
-        # store applies the tombstones — codes purged, and the new
-        # version has no tombstone table, so 'tombstones applied'
-        # commits atomically inside the pointer flip. A bounded merge
-        # carries them live; a non-versioned store cannot purge
-        # atomically and keeps filtering at serve time.
-        full = set(merged) == stamps
-        purge = self.versioned and full and tombs is not None
-        files_before = parquet_file_count(self.wh.path(cur_codes))
-        parts = (
-            [] if stored.get("n_cells") is None else [self.cell_col]
-        ) + ["__batch"]
-        collapsed = collapse_epochs(
-            codes.filter(F.col("__batch").isin(merged)),
-            "__batch",
-            parts,
-            self.id_col,
-            files_per_partition,
-        ).unionByName(codes.filter(~F.col("__batch").isin(merged)))
-        if purge:
-            # size-gated, like serving (ADVICE r13): a mass takedown
-            # followed by a full compaction must degrade to a shuffle
-            # anti-join, never a forced unbounded broadcast
-            from .tombstones import anti_join_tombstones
-
-            collapsed = anti_join_tombstones(
-                collapsed, self.wh, cur_tomb, self.id_col
-            )
-        if self.versioned:
-            # EARLY maintenance-race check before the first write into
-            # the shared v(cur+1) paths (see guard_pointer_unmoved)
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), v,
-                f"PqIndex('{self.name}').compact",
-            )
-            atomic_overwrite(
-                collapsed, self.wh.path(new_codes), partition_by=parts
-            )
-            # version-carries: byte-identical file copies, no Spark jobs
-            self.wh.copy_table(cur_books, new_books)
-            cur_rot = self._rotation_table_for(cur_books)
-            if self.wh.exists(cur_rot):
-                # OPQ stores: the rotation rides the version exactly
-                # like the codebooks it belongs to
-                self.wh.copy_table(
-                    cur_rot, self._rotation_table_for(new_books)
-                )
-            if self.wh.exists(cur_cells):
-                self.wh.copy_table(cur_cells, new_cells)
-            if tombs is not None and not purge:
-                # bounded merge: tombstones stay live on the new version
-                self.wh.overwrite(new_tomb, tombs)
-            # pre-flip re-check: a concurrent absorb/delete that landed
-            # in version `v` after the snapshot would be abandoned by
-            # the flip — refuse loudly instead (VERDICT r15 #1)
-            from ..sources.warehouse import guard_concurrent_writes
-
-            guard_concurrent_writes(
-                self.wh, cur_guard_tables, pre_inv,
-                f"PqIndex('{self.name}').compact",
-            )
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), v,
-                f"PqIndex('{self.name}').compact",
-            )
-            # the commit point: collapsed codes + watermark + the
-            # unchanged layout flip together; the shared meta is
-            # untouched (no identity field changed, and the versioned
-            # watermark's source of truth is the pointer row)
-            self._write_pointer(
-                v + 1,
-                {
-                    **{
-                        k: stored.get(k)
-                        for k in self._LAYOUT_FIELDS
-                    },
-                    "partitioned": True,
-                    "compacted_through": wm,
-                },
-            )
-        else:
-            # watermark FIRST (epochs.py crash ordering): a crash after
-            # it leaves replays skipping partitions that still exist
-            # with identical rows; re-running compact() converges
-            row = (
-                meta["id_col"], meta["vec_col"], meta["m"],
-                meta["n_codes"], meta["dim"], meta["versioned"],
-                meta.get("n_cells"), meta.get("cell_col"),
-                bool(meta.get("residual")), meta.get("train_spec"),
-                bool(meta.get("partitioned")),
-                meta.get("default_nprobe"),
-                int(wm) if wm is not None else None,
-                bool(meta.get("opq")),
-            )
-            self.wh.overwrite_rows(self.meta_table, [row], self._META_SCHEMA)
-            atomic_overwrite(
-                collapsed, self.wh.path(cur_codes), partition_by=parts
-            )
-        return {
-            "stamps_merged": len(merged),
-            "compacted_through": wm,
-            "purged": purge,
-            "files_before": files_before,
-            "files_after": parquet_file_count(self.wh.path(new_codes)),
-        }
 
     def calibrate_nprobe(
         self,
@@ -1894,7 +1575,7 @@ class PqIndex:
         seed: int = 42,
         rerank: bool = True,
         shortlist: int | None = None,
-        _tables: tuple[str, str, str] | None = None,
+        _tables: dict[str, str] | None = None,
         _layout: dict | None = None,
     ) -> dict:
         """Measured auto-nprobe for the IVF-PQ store (round 13 — the
@@ -1925,14 +1606,14 @@ class PqIndex:
         default lands in the meta AND — when the current pointer row
         carries layout fields — in the pointer row, atomic with the
         version it was measured on; legacy layoutless pointers leave
-        the meta as the default's source (the _version_row overlay
+        the meta as the default's source (the _layout overlay
         drops absent keys, so the meta value serves). Called from
         build() the default commits with the version instead."""
         from .similarity import cosine
 
         persist = _tables is None
         if persist:
-            stored, (codes_t, books_t, cells_t), _ = self._resolve()
+            _, stored, t, _ = self._resolve()
             residual = bool(stored.get("residual"))
             opq = bool(stored.get("opq"))
             if stored.get("n_cells") is None:
@@ -1942,14 +1623,14 @@ class PqIndex:
                     "probe width to calibrate"
                 )
         else:
-            codes_t, books_t, cells_t = _tables
+            t = _tables
             residual = bool((_layout or {}).get("residual"))
             opq = bool((_layout or {}).get("opq"))
-        rotation = self._rotation(books_t) if opq else None
-        model = self._model(books_t)
-        cents = self.wh.read(cells_t)
+        rotation = self._rotation(t["rotation"]) if opq else None
+        model = self._model(t["codebooks"])
+        cents = self.wh.read(t["cells"])
         # bounded centroids table: count from parquet footers (r16)
-        n_cells = self.wh.count_rows(cells_t)
+        n_cells = self.wh.count_rows(t["cells"])
         probes = (
             corpus.select(
                 F.col(self.id_col).alias("query_id"),
@@ -1978,7 +1659,7 @@ class PqIndex:
         truth = {
             (r["query_id"], r[self.id_col]) for r in truth_df.collect()
         }
-        codes = self.wh.read(codes_t)
+        codes = self.wh.read(t["codes"])
         trace: dict[int, float] = {}
         nprobe = 1
         while True:
@@ -2007,28 +1688,18 @@ class PqIndex:
                 break
             nprobe = min(nprobe * 2, int(n_cells))
         if persist:
-            meta = self.wh.read_rows(self.meta_table)[0]
-            # legacy metas lack the r13 fields: absent means the store
-            # predates them — unpartitioned, raw codes, no sample spec
-            wm = meta.get("compacted_through")
-            row = (
-                meta["id_col"], meta["vec_col"], meta["m"],
-                meta["n_codes"], meta["dim"], meta["versioned"],
-                meta.get("n_cells"), meta.get("cell_col"),
-                bool(meta.get("residual")), meta.get("train_spec"),
-                bool(meta.get("partitioned")), int(nprobe),
-                None if wm is None else int(wm),
-                bool(meta.get("opq")),
+            self._store.write_meta(
+                {**self._store.meta(), "default_nprobe": int(nprobe)}
             )
-            self.wh.overwrite_rows(self.meta_table, [row], self._META_SCHEMA)
             if self.versioned:
-                v, layout = self._version_row()
-                if layout is not None:
+                head = self._store.head()
+                if self._layout(head.row) is not None:
                     # a calibration is NOT a compaction or rebuild:
                     # the layout (watermark included) carries through
                     # unchanged, only default_nprobe updates
-                    self._write_pointer(
-                        v, {**layout, "default_nprobe": int(nprobe)}
+                    self._store.write_pointer(
+                        head.version,
+                        {**head.row, "default_nprobe": int(nprobe)},
                     )
         return {
             "default_nprobe": int(nprobe),
@@ -2062,22 +1733,20 @@ class PqIndex:
         # ONE pointer read resolves tables + layout together — a
         # concurrent rebuild flip can no longer pair one version's
         # codes with another's codebooks or layout (ADVICE r12)
-        stored, (codes_t, books_t, cells_t), tomb_t = self._resolve()
+        _, stored, t, tomb_t = self._resolve()
         if nprobe is None:
             nprobe = stored.get("default_nprobe") or 2
-        model = self._model(books_t)
+        model = self._model(t["codebooks"])
         cents = (
-            self.wh.read(cells_t)
+            self.wh.read(t["cells"])
             if stored.get("n_cells") is not None
             else None
         )
-        from .tombstones import anti_join_tombstones
-
         # deletion tombstones (round 13): the size-gated anti-join
         # drops deleted vectors from the probed codes; purge happens
         # at full versioned compaction
         codes = anti_join_tombstones(
-            self.wh.read(codes_t), self.wh, tomb_t, self.id_col
+            self.wh.read(t["codes"]), self.wh, tomb_t, self.id_col
         )
         return pq_topk(
             codes,
@@ -2097,9 +1766,9 @@ class PqIndex:
             residual=bool(stored.get("residual")),
             keep_adc=keep_adc,
             # OPQ: rotation resolved from the SAME pointer read as
-            # the codebooks (name derives from books_t)
+            # the codebooks
             rotation=(
-                self._rotation(books_t)
+                self._rotation(t["rotation"])
                 if stored.get("opq")
                 else None
             ),
@@ -2118,14 +1787,14 @@ class PqIndex:
         call: the codes table and n_cells come from the same pointer
         read, so a concurrent rebuild flip cannot produce a phantom
         verdict. Raises on flat stores (no cells to balance)."""
-        stored, (codes_t, _, _), _ = self._resolve()
+        _, stored, t, _ = self._resolve()
         if stored.get("n_cells") is None:
             raise ValueError(
                 f"PqIndex '{self.name}': cell_skew needs an IVF-PQ "
                 "store (n_cells) — a flat store has no cells"
             )
         counts = (
-            self.wh.read(codes_t)
+            self.wh.read(t["codes"])
             .groupBy(self.cell_col)
             .agg(F.count(F.lit(1)).alias("__n"))
         )
@@ -2167,20 +1836,6 @@ class PqIndex:
 
     def prune_versions(self, keep: int = 1) -> list[str]:
         """Delete old versions (keep = how many most-recent versions
-        to retain; see Bm25Index.prune_versions for the in-flight
+        to retain; see IndexStore.prune_versions for the in-flight
         contract)."""
-        if not self.versioned:
-            return []
-        if keep < 1:
-            raise ValueError("prune_versions keep must be >= 1")
-        cur = self._current_version()
-        removed = []
-        for v in range(1, cur - keep + 1):
-            names = self._table_names(v)
-            for t in names + (
-                self._tombstones_table(v),
-                self._rotation_table_for(names[1]),
-            ):
-                if self.wh.remove_table(t):
-                    removed.append(t)
-        return removed
+        return self._store.prune_versions(keep)

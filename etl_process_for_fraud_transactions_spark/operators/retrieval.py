@@ -57,7 +57,9 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .epochs import guard_sentinel_batch, replay_skippable
+from .epochs import COMPACTED_STAMP, guard_sentinel_batch, replay_skippable
+from .store import IndexStore
+from .tombstones import anti_join_tombstones
 from .text import tokens
 
 __all__ = [
@@ -472,99 +474,47 @@ class Bm25Index:
         #: ONCE per query, so postings and doclens always come from
         #: the same version.
         self.versioned = versioned
+        #: the pointer row's payload is id_type (round 12): it commits
+        #: ATOMICALLY with the version it describes — the shared meta
+        #: is refreshed only after the flip and is never the source of
+        #: truth for a versioned index's id column type. Tombstones are
+        #: (id_col, dl) rows, one per deleted DOCUMENT OCCURRENCE.
+        self._store = IndexStore(
+            wh,
+            "Bm25Index",
+            name,
+            ("postings", "doclens", "stats"),
+            id_col,
+            versioned=versioned,
+            meta_ddl=(
+                "text_col string, id_col string, n_buckets int, "
+                "k1 double, b double, partitioned boolean, "
+                "versioned boolean, id_type string, "
+                "compacted_through long"
+            ),
+            pointer_ddl="version int, id_type string, compacted_through long",
+            meta_defaults={"partitioned": False, "versioned": False},
+        )
 
     @property
     def version_table(self) -> str:
-        return f"{self.name}_version"
-
-    def _version_row(self) -> tuple[int, str | None, int | None]:
-        """(version, id_type, compacted_through) from ONE read of the
-        one-row pointer table — every versioned decision in a call
-        derives from this single row, so a concurrent rebuild flip can
-        never pair one version's layout with another's metadata (the
-        ADVICE-r11 cell_skew lesson, applied here from the start).
-        id_type rides in the pointer row (round 12) so it commits
-        ATOMICALLY with the version it describes — the shared meta
-        table is refreshed only after the flip and is never the source
-        of truth for a versioned index's id column type.
-        compacted_through (round 13, operators/epochs.py) is the
-        replay watermark: it commits with the compaction flip the same
-        way, so absorb's skip decision and the tables it would write
-        always come from one version."""
-        if not self.wh.exists(self.version_table):
-            raise ValueError(
-                f"Bm25Index '{self.name}' is versioned but has no "
-                "version pointer — run build() (it commits v1 and "
-                "writes the pointer) or fix the warehouse root"
-            )
-        # driver-side one-row read (r16): the pointer read costs a file
-        # read, not a Spark job — see warehouse.read_rows
-        row = self.wh.read_rows(self.version_table)[0]
-        # pointer rows written before round 12 carry only `version`;
-        # pre-round-13 rows lack the watermark (never compacted)
-        wm = row.get("compacted_through")
-        return (
-            int(row["version"]),
-            row.get("id_type"),
-            None if wm is None else int(wm),
-        )
-
-    def _current_version(self) -> int:
-        return self._version_row()[0]
-
-    def _version_or_none(self) -> int | None:
-        """Current pointer version, or None when no pointer exists —
-        the pre-flip maintenance-race probe (guard_pointer_unmoved)."""
-        if not self.wh.exists(self.version_table):
-            return None
-        return self._current_version()
-
-    def _table_names(
-        self, version: int | None = None
-    ) -> tuple[str, str, str]:
-        '''(postings, doclens, stats) names — one pointer read in
-        versioned mode, so a caller using several gets a jointly
-        consistent set across a concurrent rebuild flip.'''
-        if not self.versioned:
-            return (
-                f"{self.name}_postings",
-                f"{self.name}_doclens",
-                f"{self.name}_stats",
-            )
-        v = version if version is not None else self._current_version()
-        return (
-            f"{self.name}_postings_v{v}",
-            f"{self.name}_doclens_v{v}",
-            f"{self.name}_stats_v{v}",
-        )
+        return self._store.pointer_table
 
     @property
     def postings_table(self) -> str:
-        return self._table_names()[0]
+        return self._store.table("postings")
 
     @property
     def doclens_table(self) -> str:
-        return self._table_names()[1]
+        return self._store.table("doclens")
 
     @property
     def stats_table(self) -> str:
-        return self._table_names()[2]
+        return self._store.table("stats")
 
     @property
     def meta_table(self) -> str:
-        return f"{self.name}_meta"
-
-    def _tombstones_table(self, version: int | None = None) -> str:
-        """Deletion tombstones (round 13): (id_col, dl) rows, one per
-        deleted DOCUMENT OCCURRENCE. Per-version in versioned mode —
-        a rebuild's fresh version starts with no tombstones (the new
-        corpus is the caller's statement of record), and a purging
-        compaction commits 'tombstones applied' atomically by simply
-        not creating the table for the new version."""
-        if not self.versioned:
-            return f"{self.name}_tombstones"
-        v = version if version is not None else self._current_version()
-        return f"{self.name}_tombstones_v{v}"
+        return self._store.meta_table
 
     def _params(self) -> dict:
         return {
@@ -577,59 +527,36 @@ class Bm25Index:
             "versioned": self.versioned,
         }
 
-    def _write_meta(
-        self,
-        id_type: str = "bigint",
-        compacted_through: int | None = None,
-    ) -> None:
-        # id_type rides along (outside the _params equality check) so
-        # topk's day-zero empty frame matches the populated-index id
-        # column type — a string-keyed corpus must not lock a bigint
-        # schema into a downstream unionByName/writer (ADVICE r10).
-        # compacted_through (round 13) is the replay watermark for the
-        # NON-versioned layout — persisted BEFORE compact()'s data
-        # swap (epochs.py crash ordering); versioned stores carry it
-        # in the pointer row instead.
-        self.wh.overwrite_rows(
-            self.meta_table,
-            [tuple(self._params().values()) + (id_type, compacted_through)],
-            "text_col string, id_col string, n_buckets int, "
-            "k1 double, b double, partitioned boolean, "
-            "versioned boolean, id_type string, "
-            "compacted_through long",
+    def _id_type(self, head) -> str:
+        """The id column type: from the head row (a versioned store's
+        pointer, else the meta); pointer rows written before round 12
+        carry none and fall back to the meta, then 'bigint'. Serving's
+        day-zero empty frame uses it, so a string-keyed corpus never
+        locks a bigint schema into a downstream unionByName/writer
+        (ADVICE r10)."""
+        return (
+            head.row.get("id_type")
+            or (self._store.meta() or {}).get("id_type")
+            or "bigint"
         )
-
-    def _watermark(self) -> int | None:
-        """The replay watermark (None = never compacted): pointer row
-        for versioned stores, meta row otherwise. Legacy rows lack the
-        column — such stores were never compacted."""
-        if self.versioned:
-            return self._version_row()[2]
-        if not self.wh.exists(self.meta_table):
-            return None
-        wm = self.wh.read_rows(self.meta_table)[0].get("compacted_through")
-        return None if wm is None else int(wm)
 
     def _validate(self) -> None:
         if getattr(self, "_params_ok", False):
             return
-        if not self.wh.exists(self.meta_table):
-            self._params_ok = True
-            return
-        stored = self.wh.read_rows(self.meta_table)[0]
-        # metas written before the partitioned/versioned flags take
-        # their defaults; id_type and the compaction watermark are
-        # layout metadata, not identity
-        stored = {"partitioned": False, "versioned": False, **stored}
-        stored.pop("id_type", None)
-        stored.pop("compacted_through", None)
-        if stored != self._params():
-            raise ValueError(
-                f"Bm25Index '{self.name}' was built with {stored}, but "
-                f"this instance uses {self._params()} — a mismatched "
-                "reader prunes the wrong partitions or scores the "
-                "wrong column; rebuild the index or match its layout"
-            )
+        stored = self._store.meta()
+        if stored is not None:
+            # id_type and the compaction watermark are layout
+            # metadata, not identity
+            stored.pop("id_type", None)
+            stored.pop("compacted_through", None)
+            if stored != self._params():
+                raise ValueError(
+                    f"Bm25Index '{self.name}' was built with {stored}, "
+                    f"but this instance uses {self._params()} — a "
+                    "mismatched reader prunes the wrong partitions or "
+                    "scores the wrong column; rebuild the index or "
+                    "match its layout"
+                )
         self._params_ok = True
 
     def _postings(self, docs: DataFrame) -> DataFrame:
@@ -670,39 +597,32 @@ class Bm25Index:
         (BASELINE r15); the direct-path read keeps the listing O(this
         epoch's files) forever."""
         import os
+        import re
 
-        spark = self.wh.spark
         from pyspark.errors import AnalysisException
 
-        if self.partitioned:
-            import re as _re
-
-            p = os.path.join(
-                self.wh.path(dl_t), f"{_BATCH_COL}={batch}"
-            )
-            # the direct path only serves batch ids built SOLELY from
-            # characters Spark never hive-escapes — a value Spark
-            # URL-escapes on write (spaces, '%', ':'…) would MISS the
-            # dir here (populated epoch silently recorded as (0, 0) —
-            # wrong N/avgdl forever), and worse, an UNESCAPED id that
-            # happens to equal another epoch's ESCAPED dir name
-            # (batch='ep%201' vs dir `__batch=ep%201` written for
-            # 'ep 1') would read the WRONG epoch's rows; both cases
-            # must take the root-read fallback below
-            if _re.fullmatch(
-                r"[A-Za-z0-9_.\-]+", str(batch)
-            ) and os.path.isdir(p):
-                spark.catalog.refreshByPath(p)
-                return spark.read.parquet(p).agg(
-                    F.lit(str(batch)).alias(_BATCH_COL),
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.coalesce(F.sum("dl"), F.lit(0))
-                    .cast("bigint")
-                    .alias("sum_dl"),
-                )
-            # fallback: the table-root read (lists every epoch dir —
-            # correct for escaped batch names; also the empty-epoch
-            # path, which has no dir and no rows)
+        spark = self.wh.spark
+        p = os.path.join(self.wh.path(dl_t), f"{_BATCH_COL}={batch}")
+        # the direct path only serves batch ids built SOLELY from
+        # characters Spark never hive-escapes — a value Spark
+        # URL-escapes on write (spaces, '%', ':'…) would MISS the dir
+        # here (populated epoch silently recorded as (0, 0) — wrong
+        # N/avgdl forever), and worse, an UNESCAPED id that happens to
+        # equal another epoch's ESCAPED dir name (batch='ep%201' vs
+        # dir `__batch=ep%201` written for 'ep 1') would read the
+        # WRONG epoch's rows; both cases take the root read below
+        if (
+            self.partitioned
+            and re.fullmatch(r"[A-Za-z0-9_.\-]+", str(batch))
+            and os.path.isdir(p)
+        ):
+            spark.catalog.refreshByPath(p)
+            dl = spark.read.parquet(p)
+        else:
+            # the table-root read (lists every epoch dir — correct for
+            # escaped batch names; also the empty-epoch path, which
+            # has no dir and no rows, and the empty corpus, which
+            # writes no parquet files at all)
             spark.catalog.refreshByPath(self.wh.path(dl_t))
             try:
                 dl = self.wh.read(dl_t)
@@ -711,27 +631,9 @@ class Bm25Index:
                     [(str(batch), 0, 0)],
                     f"{_BATCH_COL} string, n_docs bigint, sum_dl bigint",
                 )
-            return dl.filter(F.col(_BATCH_COL) == str(batch)).agg(
-                F.lit(str(batch)).alias(_BATCH_COL),
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum("dl"), F.lit(0))
-                .cast("bigint")
-                .alias("sum_dl"),
-            )
-        spark.catalog.refreshByPath(self.wh.path(dl_t))
-        try:
-            dl = self.wh.read(dl_t)
-        except AnalysisException:
-            # an empty corpus writes no parquet files
-            return spark.createDataFrame(
-                [(str(batch), 0, 0)],
-                f"{_BATCH_COL} string, n_docs bigint, sum_dl bigint",
-            )
-        return dl.agg(
-            F.lit(str(batch)).alias(_BATCH_COL),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
-        )
+            if self.partitioned:
+                dl = dl.filter(F.col(_BATCH_COL) == str(batch))
+        return dl.agg(F.lit(str(batch)).alias(_BATCH_COL), *_dl_totals())
 
     def build(self, docs: DataFrame, batch="__build__") -> None:
         """Full (re)build. Versioned mode (round 11): on an
@@ -746,149 +648,66 @@ class Bm25Index:
         a crash anywhere before it leaves the old version serving with
         its own consistent metadata (ADVICE r11: meta used to be
         overwritten pre-flip); the shared meta table is refreshed
-        after the flip purely as the layout-guard record."""
-        from ..sources.warehouse import (
-            atomic_overwrite,
-            guard_concurrent_writes,
-            guard_pointer_unmoved,
-            table_inventory,
-        )
+        after the flip purely as the layout-guard record. A concurrent
+        absorb/delete into the served version, or a competing
+        maintainer's flip, makes the commit refuse (IndexStore.begin)."""
+        from ..session import run_concurrently
+        from ..sources.warehouse import atomic_overwrite
 
-        if self.versioned:
-            new_v = (
-                self._current_version() + 1
-                if self.wh.exists(self.version_table)
-                else 1
-            )
-            post_t, dl_t, stats_t = self._table_names(new_v)
-            # snapshot the CURRENT version's file inventory before any
-            # reads: an absorb/delete landing in v(new_v-1) while this
-            # rebuild runs writes rows the pointer flip would abandon —
-            # the pre-flip guard below refuses loudly instead
-            # (VERDICT r15 #1; tombstones included so a concurrent
-            # takedown can't be silently dropped by the fresh version)
-            cur_tables = (
-                self._table_names(new_v - 1)
-                + (self._tombstones_table(new_v - 1),)
-                if new_v > 1
-                else ()
-            )
-            pre_inv = table_inventory(self.wh, cur_tables)
-        else:
-            new_v = None
-            post_t, dl_t, stats_t = self._table_names()
-        if self.versioned:
-            # EARLY maintenance-race check before the first write into
-            # the shared v(new_v) paths: a competing compact that
-            # already flipped to new_v would have its committed tables
-            # clobbered below (see guard_pointer_unmoved)
-            guard_pointer_unmoved(
-                self._version_or_none(), new_v - 1 if new_v > 1 else None,
-                f"Bm25Index('{self.name}').build",
-            )
+        flip = self._store.begin("build")
+        t = flip.tables
+        flip.before_write()
         post, dl = self._postings(docs), self._doclens(docs)
-        post_parts = ["__tb"]
+        post_parts, dl_parts = ["__tb"], None
         if self.partitioned:
             post = post.withColumn(_BATCH_COL, F.lit(str(batch)))
             dl = dl.withColumn(_BATCH_COL, F.lit(str(batch)))
-            post_parts.append(_BATCH_COL)
-            # postings and doclens derive independently from `docs`;
-            # stats reads the PERSISTED doclens (its stated contract),
-            # so it nests after the doclens write — the whole
-            # doclens->stats chain then overlaps the heavier postings
-            # write (guide §2.6: postings ∥ (doclens -> stats))
-            from ..session import run_concurrently
+            post_parts, dl_parts = ["__tb", _BATCH_COL], [_BATCH_COL]
 
-            def _dl_then_stats():
-                atomic_overwrite(
-                    dl, self.wh.path(dl_t),
-                    partition_by=[_BATCH_COL],
-                )
-                atomic_overwrite(
-                    self._batch_stats(dl_t, batch),
-                    self.wh.path(stats_t),
-                    partition_by=[_BATCH_COL],
-                )
-
-            run_concurrently(
-                lambda: atomic_overwrite(
-                    post, self.wh.path(post_t),
-                    partition_by=post_parts,
-                ),
-                _dl_then_stats,
+        # postings and doclens derive independently from `docs`; stats
+        # reads the PERSISTED doclens (its stated contract), so it
+        # nests after the doclens write — the whole doclens->stats
+        # chain then overlaps the heavier postings write (guide §2.6:
+        # postings ∥ (doclens -> stats))
+        def _dl_then_stats():
+            atomic_overwrite(
+                dl, self.wh.path(t["doclens"]), partition_by=dl_parts
             )
-        else:
-            from ..session import run_concurrently
-
-            def _dl_then_stats():
-                self.wh.overwrite(dl_t, dl)
-                self.wh.overwrite(stats_t, self._batch_stats(dl_t, batch))
-
-            run_concurrently(
-                lambda: atomic_overwrite(
-                    post, self.wh.path(post_t),
-                    partition_by=post_parts,
-                ),
-                _dl_then_stats,
+            atomic_overwrite(
+                self._batch_stats(t["doclens"], batch),
+                self.wh.path(t["stats"]),
+                partition_by=dl_parts,
             )
+
+        run_concurrently(
+            lambda: atomic_overwrite(
+                post, self.wh.path(t["postings"]), partition_by=post_parts
+            ),
+            _dl_then_stats,
+        )
         id_type = docs.schema[self.id_col].dataType.simpleString()
-        if self.versioned:
-            # pre-flip re-check: refuse (loudly, pointer untouched) if
-            # a concurrent absorb/delete landed in the current version
-            # after the snapshot above — see guard_concurrent_writes
-            guard_concurrent_writes(
-                self.wh, cur_tables, pre_inv,
-                f"Bm25Index('{self.name}').build",
-            )
-            # and the maintenance-vs-maintenance check: the pointer
-            # must still be where this rebuild resolved it
-            guard_pointer_unmoved(
-                self._version_or_none(), new_v - 1 if new_v > 1 else None,
-                f"Bm25Index('{self.name}').build",
-            )
-            # the commit point: the new version AND its id_type become
-            # visible in this one atomic pointer flip. The replay
-            # watermark RESETS to None — a rebuild indexes a
-            # caller-supplied corpus under a fresh __build__ stamp, so
-            # the old epoch lineage is meaningless (epochs.py: restart
-            # the stream from a fresh checkpoint after a rebuild)
-            self.wh.overwrite_rows(
-                self.version_table,
-                [(int(new_v), id_type, None)],
-                "version int, id_type string, compacted_through long",
-            )
-        self._write_meta(id_type=id_type)
-        if not self.versioned:
-            # a rebuild's corpus is the caller's statement of record:
-            # stale tombstones must not filter it. Removed LAST — a
-            # crash beforehand leaves the new corpus OVER-filtered
-            # (safe for takedowns, converges on re-run), never an
-            # un-filtered window for deleted docs. Versioned rebuilds
-            # get this atomically: the new version has no tombstone
-            # table at all.
-            self.wh.remove_table(self._tombstones_table())
+        # the commit point: the new version AND its id_type become
+        # visible in this one atomic pointer flip. The replay
+        # watermark RESETS to None — a rebuild indexes a
+        # caller-supplied corpus under a fresh __build__ stamp, so the
+        # old epoch lineage is meaningless (epochs.py)
+        flip.commit({"id_type": id_type, "compacted_through": None})
+        self._store.write_meta(
+            {**self._params(), "id_type": id_type, "compacted_through": None}
+        )
+        # a rebuild's corpus is the caller's statement of record: stale
+        # tombstones must not filter it. Removed LAST — a crash
+        # beforehand leaves the new corpus OVER-filtered (safe for
+        # takedowns, converges on re-run), never an un-filtered window
+        # for deleted docs (a fresh version normally has none at all)
+        self.wh.remove_table(flip.tombstones)
         self._params_ok = True
 
     def prune_versions(self, keep: int = 1) -> list[str]:
-        """Delete old versions' table directories (the versioned-
-        rebuild garbage collector). `keep` retains the most recent
-        `keep` versions (default 1 = current only); pass keep=2 while
-        lagging readers may still hold plans resolved against the
-        previous version — a lazy DataFrame pins its resolved paths at
-        plan time, so only prune a version after queries planned
-        against it drain (ADVICE r11: the guard is now a caller knob,
-        not only a docstring)."""
-        if not self.versioned:
-            return []
-        if keep < 1:
-            raise ValueError("prune_versions keep must be >= 1")
-        cur = self._current_version()
-        removed = []
-        for v in range(1, cur - keep + 1):
-            for t in self._table_names(v) + (self._tombstones_table(v),):
-                if self.wh.remove_table(t):
-                    removed.append(t)
-        return removed
+        """Delete superseded versions' tables; keep=2 while lagging
+        readers may hold plans on the previous version (see
+        IndexStore.prune_versions)."""
+        return self._store.prune_versions(keep)
 
     def absorb(self, new_docs: DataFrame, batch=None) -> None:
         """Index a new document batch — O(batch); idf/avgdl shift
@@ -919,25 +738,20 @@ class Bm25Index:
         failed partitioned absorb that is never replayed leaves
         N/avgdl skewed in whichever direction the surviving subset
         implies — the stats row is NOT a commit marker."""
+        from ..session import run_concurrently
+
         self._validate()
         if batch is not None:
             guard_sentinel_batch(batch)
-        if self.versioned:
-            # ONE pointer read: the skip decision (watermark) and the
-            # tables a non-skipped absorb writes come from the same row
-            v, _, wm = self._version_row()
-            post_t, dl_t, stats_t = self._table_names(v)
-            tomb_t = self._tombstones_table(v)
-        else:
-            post_t, dl_t, stats_t = self._table_names()
-            tomb_t = self._tombstones_table()
-            # one fresh one-row meta read per call — noise next to the
-            # tokenize/aggregate work (the IvfIndex.absorb precedent)
-            wm = self._watermark() if self.partitioned else None
+        # ONE head read: the skip decision (watermark) and the tables
+        # a non-skipped absorb writes come from the same row
+        head = self._store.head()
+        t = self._store.tables(head.version)
+        tomb_t = self._store.tombstones(head.version)
         if (
             self.partitioned
             and batch is not None
-            and replay_skippable(batch, wm)
+            and replay_skippable(batch, head.watermark)
         ):
             return
         if self.wh.exists(tomb_t):
@@ -947,8 +761,6 @@ class Bm25Index:
             # exactly the occurrences indexed BEFORE the delete). The
             # ban is a size-gated anti-join against the tombstone id
             # set — deterministic, so replays converge.
-            from .tombstones import anti_join_tombstones
-
             new_docs = anti_join_tombstones(
                 new_docs, self.wh, tomb_t, self.id_col
             )
@@ -959,30 +771,21 @@ class Bm25Index:
         # (silently wrong idf). Backfill the pre-append corpus first:
         # partitioned doclens reconstructs per-batch rows exactly; an
         # unpartitioned legacy corpus becomes one '__legacy__' row.
-        if not self.wh.exists(stats_t) and self.wh.exists(dl_t):
+        if not self.wh.exists(t["stats"]) and self.wh.exists(t["doclens"]):
             from ..sources.warehouse import atomic_overwrite
 
-            legacy_dl = self.wh.read(dl_t)
+            legacy_dl = self.wh.read(t["doclens"])
             if self.partitioned:
-                backfill = legacy_dl.groupBy(_BATCH_COL).agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.coalesce(F.sum("dl"), F.lit(0))
-                    .cast("bigint")
-                    .alias("sum_dl"),
-                )
                 atomic_overwrite(
-                    backfill, self.wh.path(stats_t),
+                    legacy_dl.groupBy(_BATCH_COL).agg(*_dl_totals()),
+                    self.wh.path(t["stats"]),
                     partition_by=[_BATCH_COL],
                 )
             else:
                 self.wh.overwrite(
-                    stats_t,
+                    t["stats"],
                     legacy_dl.agg(
-                        F.lit("__legacy__").alias(_BATCH_COL),
-                        F.count(F.lit(1)).alias("n_docs"),
-                        F.coalesce(F.sum("dl"), F.lit(0))
-                        .cast("bigint")
-                        .alias("sum_dl"),
+                        F.lit("__legacy__").alias(_BATCH_COL), *_dl_totals()
                     ),
                 )
         post, dl = self._postings(new_docs), self._doclens(new_docs)
@@ -991,7 +794,6 @@ class Bm25Index:
                 raise ValueError(
                     "a partitioned index requires a batch id for absorb()"
                 )
-            from ..session import run_concurrently
 
             # the postings and doclens epoch writes are independent;
             # the batch's one stats row lands as a dynamic partition
@@ -1002,17 +804,19 @@ class Bm25Index:
             # write — postings ∥ (doclens -> stats), guide §2.6
             def _dl_then_stats():
                 self.wh.append_partitioned(
-                    dl_t,
+                    t["doclens"],
                     dl.withColumn(_BATCH_COL, F.lit(str(batch))),
                     _BATCH_COL,
                 )
                 self.wh.append_partitioned(
-                    stats_t, self._batch_stats(dl_t, batch), _BATCH_COL
+                    t["stats"],
+                    self._batch_stats(t["doclens"], batch),
+                    _BATCH_COL,
                 )
 
             run_concurrently(
                 lambda: self.wh.append_partitioned(
-                    post_t,
+                    t["postings"],
                     post.withColumn(_BATCH_COL, F.lit(str(batch))),
                     ["__tb", _BATCH_COL],
                 ),
@@ -1024,8 +828,6 @@ class Bm25Index:
                     "batch stamps need a partitioned index "
                     "(Bm25Index(partitioned=True))"
                 )
-            from ..session import run_concurrently
-
             # all three appends are independent here: the stats row
             # aggregates the BATCH frame (an unpartitioned doclens
             # read-back could not isolate the new rows from the old
@@ -1035,16 +837,12 @@ class Bm25Index:
             run_concurrently(
                 lambda: post.write.mode("append")
                 .partitionBy("__tb")
-                .parquet(self.wh.path(post_t)),
-                lambda: self.wh.append(dl_t, dl),
+                .parquet(self.wh.path(t["postings"])),
+                lambda: self.wh.append(t["doclens"], dl),
                 lambda: self.wh.append(
-                    stats_t,
+                    t["stats"],
                     dl.agg(
-                        F.lit("__absorb__").alias(_BATCH_COL),
-                        F.count(F.lit(1)).alias("n_docs"),
-                        F.coalesce(F.sum("dl"), F.lit(0))
-                        .cast("bigint")
-                        .alias("sum_dl"),
+                        F.lit("__absorb__").alias(_BATCH_COL), *_dl_totals()
                     ),
                 ),
             )
@@ -1078,13 +876,8 @@ class Bm25Index:
         Returns {"deleted_docs", "deleted_dl"} (occurrences actually
         tombstoned by THIS call)."""
         self._validate()
-        if self.versioned:
-            v, _, _ = self._version_row()
-            _, dl_t, _ = self._table_names(v)
-            tomb_t = self._tombstones_table(v)
-        else:
-            dl_t = self._table_names()[1]
-            tomb_t = self._tombstones_table()
+        v = self._store.version()
+        dl_t = self._store.table("doclens", v)
         if not self.wh.exists(dl_t):
             # day-zero store (empty build writes no doclens files):
             # nothing indexed, nothing to tombstone
@@ -1092,45 +885,19 @@ class Bm25Index:
         dl = self.wh.read(dl_t)
         if self.partitioned:
             dl = dl.drop(_BATCH_COL)
-        # hint-free joins (the erase_keys convention): a handful of
+        # hint-free join (the erase_keys convention): a handful of
         # takedown ids auto-broadcasts under Spark's own threshold, a
         # MASS delete degrades to a shuffle join instead of a forced
         # broadcast of an unbounded caller frame
-        new_tombs = dl.join(
+        occurrences = dl.join(
             ids.select(self.id_col).distinct(), self.id_col, "left_semi"
+        ).select(self.id_col, F.col("dl").cast("bigint").alias("dl"))
+        return self._store.delete_gate(
+            self._store.tombstones(v),
+            occurrences,
+            deleted_docs=F.count(F.lit(1)),
+            deleted_dl=F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint"),
         )
-        if self.wh.exists(tomb_t):
-            new_tombs = new_tombs.join(
-                self.wh.read(tomb_t).select(self.id_col).distinct(),
-                self.id_col,
-                "left_anti",
-            )
-        # r17 (VERDICT r16 item 5, §1/§2.6): the gate stats ride the
-        # checkpoint materialization itself via observed metrics
-        # (CollectMetrics is computed inside the action with
-        # exactly-once delivery, unlike accumulators), so the separate
-        # agg().first() job is gone — 3 sequential jobs become 2
-        # (checkpoint, conditional append), and a no-op delete is ONE
-        # job. Values are the same exact integer arithmetic, now
-        # collected during the pass that was already running.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new_tombs = (
-            new_tombs.select(
-                self.id_col, F.col("dl").cast("bigint").alias("dl")
-            )
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("d"),
-            )
-            .localCheckpoint()
-        )
-        row = obs.get
-        if row["n"]:
-            self.wh.append(tomb_t, new_tombs)
-        return {"deleted_docs": int(row["n"]), "deleted_dl": int(row["d"])}
 
     def compact(
         self,
@@ -1138,16 +905,18 @@ class Bm25Index:
         through: int | None = None,
         live: bool = False,
     ) -> dict:
-        """Epoch-partition maintenance (round 13, operators/epochs.py
-        has the full semantics): collapse `__batch` partitions into
-        one `__compacted__` stamp — postings keep the `__tb`
-        term-bucket level (query pruning is unchanged), doclens
-        collapse to one partition, and the merged epochs' stats rows
-        SUM into a single (`__compacted__`, n_docs, sum_dl) row, so
-        serving's N/avgdl read shrinks back to O(1) rows no matter
-        how many epochs were absorbed. The sums are exact integers —
-        post-compaction scores are bit-identical. A pure LAYOUT
-        rewrite: nothing is retokenized (unlike build()).
+        """Epoch-partition maintenance (operators/epochs.py states the
+        semantics, IndexStore.compact the mechanics): collapse
+        `__batch` partitions into one `__compacted__` stamp — postings
+        keep the `__tb` term-bucket level (query pruning is unchanged),
+        doclens collapse to one partition, and the merged epochs'
+        stats rows SUM into a single (`__compacted__`, n_docs, sum_dl)
+        row, so serving's N/avgdl read shrinks back to O(1) rows no
+        matter how many epochs were absorbed. The sums are exact
+        integers — post-compaction scores are bit-identical. A pure
+        LAYOUT rewrite: nothing is retokenized (unlike build()). A
+        full merge on a versioned store also purges tombstoned docs
+        and folds their exact totals out of the stats.
 
         Why it matters at scale: a 1-minute trigger writes ~1,440
         epoch directories a day under EVERY term bucket — after a
@@ -1157,309 +926,47 @@ class Bm25Index:
         well-sized files.
 
         `through` bounds WHICH epochs merge (integer epoch ids
-        <= through; maintenance stamps always merge): epochs above it
-        keep their own partitions and stay individually replayable.
-        Structured Streaming processes epochs serially, so every
-        epoch below the latest is fully committed — pass
-        `through = latest_epoch - 1` to compact under a LIVE stream.
-        The default (None, merge everything) is for a quiesced
-        stream: the newest epoch might be a partially-written crash
-        victim, and merging it bakes the partial rows in where the
-        replay can no longer repair them (epochs.py has the full
-        argument).
+        <= through; maintenance stamps always merge) — pass
+        `through = latest_epoch - 1` (or `live=True`) under a LIVE
+        stream; the default merges everything and is for a quiesced
+        stream.
 
-        Non-versioned stores persist the watermark BEFORE the data
-        swap (either crash side is correct — see epochs.py);
-        versioned stores write the collapsed tables off to the side
-        and commit watermark + layout in the one pointer flip.
-
-        Returns {"stamps_merged", "compacted_through",
+        Returns {"stamps_merged", "compacted_through", "purged",
         "files_before", "files_after"}."""
-        from ..sources.warehouse import atomic_overwrite
-        from .epochs import (
-            COMPACTED_STAMP,
-            SENTINEL_STAMPS,
-            collapse_epochs,
-            epoch_watermark,
-            hive_partition_values,
-            parquet_file_count,
-        )
-
         self._validate()
-        if not self.partitioned:
-            raise ValueError(
-                f"Bm25Index '{self.name}': compact() is epoch-partition "
-                "maintenance — only a partitioned=True store "
-                "accumulates __batch partitions"
-            )
-        if not self.wh.exists(self.meta_table):
-            raise ValueError(
-                f"Bm25Index '{self.name}': no meta marker — run build()"
-            )
-        meta = self.wh.read_rows(self.meta_table)[0]
-        if self.versioned:
-            cur, id_type, prev_wm = self._version_row()
-            if id_type is None:  # legacy pre-r12 pointer
-                id_type = meta.get("id_type") or "bigint"
-            cur_post, cur_dl, cur_stats = self._table_names(cur)
-            new_post, new_dl, new_stats = self._table_names(cur + 1)
-            cur_tomb = self._tombstones_table(cur)
-            new_tomb = self._tombstones_table(cur + 1)
-            # snapshot the current version's file inventory before any
-            # reads — the pre-flip guard refuses if a concurrent
-            # absorb/delete lands mid-compaction (VERDICT r15 #1)
-            from ..sources.warehouse import table_inventory
-
-            cur_tables = (cur_post, cur_dl, cur_stats, cur_tomb)
-            pre_inv = table_inventory(self.wh, cur_tables)
-        else:
-            id_type = meta.get("id_type") or "bigint"
-            prev_wm = meta.get("compacted_through")
-            prev_wm = None if prev_wm is None else int(prev_wm)
-            cur_post = new_post = self._table_names()[0]
-            cur_dl = new_dl = self._table_names()[1]
-            cur_stats = new_stats = self._table_names()[2]
-            cur_tomb = new_tomb = self._tombstones_table()
-        tombs = (
-            self.wh.read(cur_tomb) if self.wh.exists(cur_tomb) else None
-        )
-        # stats is the COMPLETE epoch record — an empty epoch writes a
-        # (0, 0) stats row but no postings/doclens files, and its stamp
-        # must still advance the watermark or its replay would append a
-        # duplicate stats row after compaction. The stamp column is
-        # cast to string up front: partition-type inference reads an
-        # all-numeric-epoch store's __batch as int, and the
-        # restamp-to-__compacted__ union must not mix types.
-        def _stamped(table):
-            return self.wh.read(table).withColumn(
-                _BATCH_COL, F.col(_BATCH_COL).cast("string")
-            )
-
+        head = self._store.head()
         # legacy pre-stats store (ADVICE r13): topk and absorb both
         # handle the missing-stats layout explicitly, so compact()
         # must fail GUIDED, not with a raw AnalysisException — one
         # absorb() backfills the stats table from the doclens record
         # (the round-12 legacy-upgrade path), after which compact()
-        # has the complete epoch record it folds.
-        if not self.wh.exists(cur_stats):
+        # has the complete epoch record it folds. Stats is that
+        # COMPLETE record: an empty epoch writes a (0, 0) stats row
+        # but no postings/doclens files, and its stamp must still
+        # advance the watermark.
+        if self.partitioned and not self.wh.exists(
+            self._store.table("stats", head.version)
+        ):
             raise ValueError(
                 f"Bm25Index '{self.name}': no stats table — this is a "
                 "legacy pre-stats store. Run one absorb() first (it "
                 "backfills per-epoch stats from the doclens record), "
                 "then compact()."
             )
-        stats = _stamped(cur_stats)
-        # stamp enumeration from the hive directory names (r16): the
-        # same distinct set, read driver-side instead of two Spark
-        # jobs — see epochs.hive_partition_values
-        stamps = hive_partition_values(self.wh.path(cur_stats), _BATCH_COL)
-        post = dl = None
-        if self.wh.exists(cur_post):
-            post = _stamped(cur_post)
-            stamps |= hive_partition_values(
-                self.wh.path(cur_post), _BATCH_COL
-            )
-        if self.wh.exists(cur_dl):
-            dl = _stamped(cur_dl)
-        # integer-orderability check over ALL stamps first (raises on
-        # ad-hoc ids — they cannot be ordered against `through` or the
-        # watermark), then the merge subset and its watermark
-        epoch_watermark(stamps)
-        if live:
-            # live-stream mode: derive the bound from the scanned
-            # stamps — merge everything below the NEWEST integer
-            # epoch, which is the only one a crashed absorb may have
-            # left partially written (epochs.py)
-            if through is not None:
-                raise ValueError(
-                    "compact(live=True) derives its own bound — pass "
-                    "through= or live=True, not both"
-                )
-            ints = [int(s) for s in stamps if s not in SENTINEL_STAMPS]
-            through = max(ints) - 1 if ints else None
-        merged = sorted(
-            s
-            for s in stamps
-            if s in SENTINEL_STAMPS
-            or through is None
-            or int(s) <= int(through)
+        return self._store.compact(
+            {
+                "postings": ["__tb", _BATCH_COL],
+                "doclens": [_BATCH_COL],
+                "stats": [_BATCH_COL],
+            },
+            fold={"stats": _fold_stats},
+            files_per_partition=files_per_partition,
+            through=through,
+            live=live,
+            partitioned=self.partitioned,
+            head=head,
+            payload={"id_type": self._id_type(head)},
         )
-        wm = epoch_watermark(merged, prev_wm)
-        # physical deletion (round 13): a FULL merge on a VERSIONED
-        # store applies the tombstones for real — purged postings and
-        # doclens, stats folded down by the exact tombstone totals,
-        # and the new version simply has NO tombstone table, so
-        # "tombstones applied" commits atomically inside the pointer
-        # flip (a crash pre-flip leaves the old version serving with
-        # its tombstones intact). A bounded merge keeps un-merged
-        # epochs' raw rows, so tombstones carry to the new version
-        # un-applied; a non-versioned store cannot purge atomically
-        # and keeps filtering at serve time — delete() documents this.
-        full = set(merged) == stamps
-        purge = self.versioned and full and tombs is not None
-        files_before = (
-            parquet_file_count(self.wh.path(cur_post))
-            if post is not None
-            else 0
-        )
-
-        def _split(df):
-            return (
-                df.filter(F.col(_BATCH_COL).isin(merged)),
-                df.filter(~F.col(_BATCH_COL).isin(merged)),
-            )
-
-        def _purged(df):
-            if not purge or df is None:
-                return df
-            # size-gated, like serving (ADVICE r13): a mass takedown
-            # followed by a full compaction must degrade to a shuffle
-            # anti-join, never a forced unbounded broadcast
-            from .tombstones import anti_join_tombstones
-
-            return anti_join_tombstones(df, self.wh, cur_tomb, self.id_col)
-
-        writes = []
-        if post is not None:
-            merge_p, keep_p = _split(post)
-            writes.append((
-                new_post,
-                _purged(
-                    collapse_epochs(
-                        merge_p, _BATCH_COL, ["__tb", _BATCH_COL],
-                        self.id_col, files_per_partition,
-                    ).unionByName(keep_p)
-                ),
-                ["__tb", _BATCH_COL],
-            ))
-        elif self.versioned:
-            writes.append((new_post, post, None))  # nothing to carry
-        if dl is not None:
-            merge_d, keep_d = _split(dl)
-            writes.append((
-                new_dl,
-                _purged(
-                    collapse_epochs(
-                        merge_d, _BATCH_COL, [_BATCH_COL],
-                        self.id_col, files_per_partition,
-                    ).unionByName(keep_d)
-                ),
-                [_BATCH_COL],
-            ))
-        merge_s, keep_s = _split(stats)
-        stats_src = merge_s.select(
-            F.col("n_docs").cast("bigint").alias("n_docs"),
-            F.col("sum_dl").cast("bigint").alias("sum_dl"),
-        )
-        if purge:
-            # exact integer fold-down: the purged corpus's stats are
-            # bit-identical to one that never held the deleted docs
-            stats_src = stats_src.unionByName(
-                tombs.agg(
-                    (-F.count(F.lit(1))).cast("bigint").alias("n_docs"),
-                    (-F.coalesce(F.sum("dl"), F.lit(0)))
-                    .cast("bigint")
-                    .alias("sum_dl"),
-                )
-            )
-        compacted_stats = stats_src.agg(
-            F.lit(COMPACTED_STAMP).alias(_BATCH_COL),
-            F.coalesce(F.sum("n_docs"), F.lit(0))
-            .cast("bigint")
-            .alias("n_docs"),
-            F.coalesce(F.sum("sum_dl"), F.lit(0))
-            .cast("bigint")
-            .alias("sum_dl"),
-        )
-        writes.append((
-            new_stats,
-            compacted_stats.unionByName(
-                keep_s.select(_BATCH_COL, "n_docs", "sum_dl")
-            ),
-            [_BATCH_COL],
-        ))
-        if self.versioned:
-            # EARLY maintenance-race check before the first write into
-            # the shared v(cur+1) paths: a competing maintainer that
-            # already flipped would have its committed tables clobbered
-            # by the writes below — refuse while they're intact (the
-            # pre-flip re-check covers the later window; see
-            # guard_pointer_unmoved for the residual caveat)
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"Bm25Index('{self.name}').compact",
-            )
-            from ..session import run_concurrently
-
-            # the collapsed tables are independent of one another —
-            # overlap their writes (guide §2.6)
-            run_concurrently(*[
-                lambda t=table, f=frame, p=parts: atomic_overwrite(
-                    f, self.wh.path(t), partition_by=p
-                )
-                for table, frame, parts in writes
-                if frame is not None
-            ])
-            if tombs is not None and not purge:
-                # bounded merge: tombstones stay live on the new
-                # version — a byte-identical file copy, no Spark job
-                from ..sources.warehouse import copy_table_atomic
-
-                copy_table_atomic(
-                    self.wh.spark,
-                    self.wh.path(cur_tomb),
-                    self.wh.path(new_tomb),
-                )
-            # pre-flip re-check: a concurrent absorb/delete that landed
-            # in version `cur` after the snapshot would be abandoned by
-            # the flip — refuse loudly instead (VERDICT r15 #1)
-            from ..sources.warehouse import guard_concurrent_writes
-
-            guard_concurrent_writes(
-                self.wh, cur_tables, pre_inv,
-                f"Bm25Index('{self.name}').compact",
-            )
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"Bm25Index('{self.name}').compact",
-            )
-            # the commit point: collapsed tables + watermark + id_type
-            # become visible in one pointer flip
-            self.wh.overwrite_rows(
-                self.version_table,
-                [(int(cur + 1), id_type, wm)],
-                "version int, id_type string, compacted_through long",
-            )
-            self._write_meta(id_type=id_type)
-        else:
-            # watermark FIRST: a crash after it leaves replays skipping
-            # partitions that still exist with identical rows, and
-            # re-running compact() converges (epochs.py crash ordering)
-            self._write_meta(id_type=id_type, compacted_through=wm)
-            from ..session import run_concurrently
-
-            run_concurrently(*[
-                lambda t=table, f=frame, p=parts: atomic_overwrite(
-                    f, self.wh.path(t), partition_by=p
-                )
-                for table, frame, parts in writes
-                if frame is not None
-            ])
-        return {
-            "stamps_merged": len(merged),
-            "compacted_through": wm,
-            "purged": purge,
-            "files_before": files_before,
-            "files_after": (
-                parquet_file_count(self.wh.path(new_post))
-                if post is not None
-                else 0
-            ),
-        }
 
     def topk(
         self,
@@ -1481,18 +988,14 @@ class Bm25Index:
         O(corpus) footnote."""
         self._validate()
         spark = self.wh.spark
-        # one pointer resolution for the whole query: postings, stats,
+        # one head resolution for the whole query: postings, stats,
         # tombstones (and the legacy-fallback doclens) always come
         # from the SAME version, even across a concurrent versioned
         # rebuild flip
-        if self.versioned:
-            _v, _ptr_id_type, _ = self._version_row()
-            post_t, dl_t, stats_t = self._table_names(_v)
-            tomb_t = self._tombstones_table(_v)
-        else:
-            _ptr_id_type = None
-            post_t, dl_t, stats_t = self._table_names()
-            tomb_t = self._tombstones_table()
+        head = self._store.head()
+        t = self._store.tables(head.version)
+        post_t, stats_t = t["postings"], t["stats"]
+        tomb_t = self._store.tombstones(head.version)
         q = (
             queries
             if isinstance(queries, DataFrame)
@@ -1501,8 +1004,9 @@ class Bm25Index:
         qterms = q.select("term").distinct()
         # day-zero: building an EMPTY corpus (or a stream's first
         # epoch) writes no parquet files, and schema inference over a
-        # file-less directory raises. Accepted ONLY when the meta
-        # marker proves a build completed (the NearDupIndex guard):
+        # file-less directory raises. Accepted ONLY when a commit
+        # marker proves a build completed (the pointer row of a
+        # versioned store, else the meta — the NearDupIndex guard):
         # an index unreadable for an environmental reason must not
         # silently serve zero results.
         from pyspark.errors import AnalysisException
@@ -1513,19 +1017,7 @@ class Bm25Index:
             cond = e.getCondition() if hasattr(e, "getCondition") else None
             if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
                 raise
-            if self.versioned:
-                # the pointer row IS the commit marker, and its
-                # id_type is atomic with the version it describes (the
-                # row was already read once above); a pre-round-12
-                # pointer (no id_type column) falls back to the meta
-                # table — which may record the real type — before the
-                # 'bigint' default (ADVICE r12)
-                id_type = _ptr_id_type
-                if id_type is None and self.wh.exists(self.meta_table):
-                    meta = self.wh.read_rows(self.meta_table)[0]
-                    id_type = meta.get("id_type")
-                id_type = id_type or "bigint"
-            elif not self.wh.exists(self.meta_table):
+            if not (self.versioned or head.row):
                 raise ValueError(
                     f"Bm25Index '{self.name}': '{post_t}' "
                     "has no readable data and no meta marker — the "
@@ -1533,12 +1025,10 @@ class Bm25Index:
                     "wrong; run build() (it writes the marker even for "
                     "an empty corpus) or fix the root"
                 ) from e
-            else:
-                meta = self.wh.read_rows(self.meta_table)[0]
-                id_type = meta.get("id_type") or "bigint"
             return spark.createDataFrame(
                 [],
-                f"query_id string, rank int, {self.id_col} {id_type}, "
+                f"query_id string, rank int, {self.id_col} "
+                f"{self._id_type(head)}, "
                 "n_terms_matched bigint, score double",
             )
         # partition pruning: bucket ids of the bounded term set via the
@@ -1580,8 +1070,6 @@ class Bm25Index:
         # compaction; until then this filter IS the delete.
         tombs = self.wh.read(tomb_t) if self.wh.exists(tomb_t) else None
         if tombs is not None:
-            from .tombstones import anti_join_tombstones
-
             # pass the already-read frame: one parquet resolution per
             # serve instead of two (r17, §1.2; plan identical)
             post = anti_join_tombstones(
@@ -1590,21 +1078,9 @@ class Bm25Index:
         if self.wh.exists(stats_t):
             # <= #batches rows; integer sums are exact, so this is
             # bit-identical to the full doclens aggregate it replaces
-            base = self.wh.read(stats_t).select(
-                F.col("n_docs").cast("bigint").alias("n_docs"),
-                F.col("sum_dl").cast("bigint").alias("sum_dl"),
-            )
+            base = _stats_rows(self.wh.read(stats_t))
             if tombs is not None:
-                base = base.unionByName(
-                    tombs.agg(
-                        (-F.count(F.lit(1)))
-                        .cast("bigint")
-                        .alias("n_docs"),
-                        (-F.coalesce(F.sum("dl"), F.lit(0)))
-                        .cast("bigint")
-                        .alias("sum_dl"),
-                    )
-                )
+                base = base.unionByName(_tomb_totals(tombs))
             # N can legitimately reach 0 on a live store: delete()
             # tombstoning EVERY doc leaves postings files on disk (so
             # the day-zero fallback above does not fire) with all rows
@@ -1625,7 +1101,7 @@ class Bm25Index:
             # the old full-doclens aggregate, kept so an existing
             # store keeps serving without a rebuild (tombstones
             # filter the doclens rows directly, same arithmetic)
-            dl = self.wh.read(dl_t)
+            dl = self.wh.read(t["doclens"])
             if self.partitioned:
                 dl = dl.drop(_BATCH_COL)
             if tombs is not None:
@@ -1665,6 +1141,50 @@ class Bm25Index:
             matched, stats, q, self.id_col, self.k1, self.b
         )
         return _rank_topk(scored, self.id_col, topk)
+
+
+def _dl_totals() -> tuple[Column, Column]:
+    """(n_docs, sum_dl) aggregates over a (…, dl) frame — exact
+    integers, so every fold of them is bit-identical to a full
+    doclens aggregate."""
+    return (
+        F.count(F.lit(1)).alias("n_docs"),
+        F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
+    )
+
+
+def _stats_rows(stats: DataFrame) -> DataFrame:
+    return stats.select(
+        F.col("n_docs").cast("bigint").alias("n_docs"),
+        F.col("sum_dl").cast("bigint").alias("sum_dl"),
+    )
+
+
+def _tomb_totals(tombs: DataFrame) -> DataFrame:
+    """One NEGATIVE (n_docs, sum_dl) row: the exact totals a stats fold
+    subtracts for the tombstoned occurrences."""
+    return tombs.agg(
+        (-F.count(F.lit(1))).cast("bigint").alias("n_docs"),
+        (-F.coalesce(F.sum("dl"), F.lit(0))).cast("bigint").alias("sum_dl"),
+    )
+
+
+def _fold_stats(
+    merged: DataFrame, kept: DataFrame, tombs: DataFrame | None
+) -> DataFrame:
+    """Bm25Index's stats collapse: the merged epochs' rows SUM into one
+    `__compacted__` row — minus the tombstone totals when the
+    compaction purges (an exact integer fold-down: the purged corpus's
+    stats are bit-identical to one that never held the deleted docs);
+    kept epochs' rows pass through."""
+    src = _stats_rows(merged)
+    if tombs is not None:
+        src = src.unionByName(_tomb_totals(tombs))
+    return src.agg(
+        F.lit(COMPACTED_STAMP).alias(_BATCH_COL),
+        F.coalesce(F.sum("n_docs"), F.lit(0)).cast("bigint").alias("n_docs"),
+        F.coalesce(F.sum("sum_dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
+    ).unionByName(kept.select(_BATCH_COL, "n_docs", "sum_dl"))
 
 
 # --- hybrid retrieval (reciprocal-rank fusion) ------------------------------

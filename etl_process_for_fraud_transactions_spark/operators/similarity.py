@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .epochs import guard_sentinel_batch, replay_skippable
+from .store import IndexStore
+from .tombstones import anti_join_tombstones
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -499,76 +501,45 @@ class IvfIndex:
         #: on disk until prune_versions() — in-flight queries hold
         #: path references, so prune only after they drain.
         self.versioned = versioned
+        #: the pointer row's payload is n_cells: cell_skew reads it
+        #: from the same row as the vectors table it measures.
+        #: Tombstones are one id per deleted vector; retrain() CARRIES
+        #: them (it preserves rows, so the filter must survive the
+        #: re-shard).
+        self._store = IndexStore(
+            wh,
+            "IvfIndex",
+            name,
+            ("vectors", "centroids"),
+            id_col,
+            versioned=versioned,
+            meta_ddl=(
+                "id_col string, vec_col string, cell_col string, "
+                "n_cells int, dim int, partitioned boolean, "
+                "quantized boolean, versioned boolean, "
+                "default_nprobe int, compacted_through long"
+            ),
+            pointer_ddl="version int, n_cells int, compacted_through long",
+            meta_defaults={
+                "partitioned": False, "quantized": False, "versioned": False,
+            },
+        )
 
     @property
     def version_table(self) -> str:
-        return f"{self.name}_version"
-
-    def _version_row(self) -> tuple[int, int | None]:
-        """(version, compacted_through) from ONE pointer-row read.
-
-        Callers that make a replay-skip decision AND act on the
-        version's tables must take both from the same read (the
-        Bm25Index._version_row pattern): reading the watermark and
-        the version separately lets a concurrent compact(live=True)
-        flip land between the two reads, pairing a STALE watermark
-        with the NEW version's tables — a crash-replayed epoch
-        already merged into __compacted__ would not be skipped and
-        would write duplicate rows (ADVICE r13)."""
-        if not self.wh.exists(self.version_table):
-            raise ValueError(
-                f"IvfIndex '{self.name}' is versioned but has no "
-                "version pointer — run build() (it commits v1 and "
-                "writes the pointer) or fix the warehouse root"
-            )
-        # driver-side one-row read (r16): no Spark job — warehouse.read_rows
-        row = self.wh.read_rows(self.version_table)[0]
-        wm = row.get("compacted_through")
-        return int(row["version"]), (None if wm is None else int(wm))
-
-    def _current_version(self) -> int:
-        return self._version_row()[0]
-
-    def _version_or_none(self) -> int | None:
-        """Current pointer version, or None when no pointer exists —
-        the pre-flip maintenance-race probe (guard_pointer_unmoved)."""
-        if not self.wh.exists(self.version_table):
-            return None
-        return self._current_version()
-
-    def _table_names(self, version: int | None = None) -> tuple[str, str]:
-        '''(vectors, centroids) names — resolved from ONE pointer
-        read in versioned mode, so a caller that uses both gets a
-        jointly consistent pair even across a concurrent retrain
-        flip.'''
-        if not self.versioned:
-            return f"{self.name}_vectors", f"{self.name}_centroids"
-        v = version if version is not None else self._current_version()
-        return f"{self.name}_vectors_v{v}", f"{self.name}_centroids_v{v}"
+        return self._store.pointer_table
 
     @property
     def vectors_table(self) -> str:
-        return self._table_names()[0]
+        return self._store.table("vectors")
 
     @property
     def centroids_table(self) -> str:
-        return self._table_names()[1]
+        return self._store.table("centroids")
 
     @property
     def meta_table(self) -> str:
-        return f"{self.name}_meta"
-
-    def _tombstones_table(self, version: int | None = None) -> str:
-        """Deletion tombstones (round 13): one id per deleted
-        document. Per-version in versioned mode — a build's fresh
-        lineage starts clean, and a purging compaction commits
-        'tombstones applied' by not creating the table for the new
-        version (retrain CARRIES them: it preserves rows, so the
-        filter must survive the re-shard)."""
-        if not self.versioned:
-            return f"{self.name}_tombstones"
-        v = version if version is not None else self._current_version()
-        return f"{self.name}_tombstones_v{v}"
+        return self._store.meta_table
 
     def _frame_dim(self, frame: DataFrame, vec_col: str) -> int:
         """min/max vector length in one aggregate; raises on ragged."""
@@ -599,46 +570,18 @@ class IvfIndex:
         # identity keys. compacted_through (round 13): the replay
         # watermark compact() records — build resets it, retrain
         # carries it (see operators/epochs.py).
-        self.wh.overwrite_rows(
-            self.meta_table,
-            [
-                (
-                    self.id_col,
-                    self.vec_col,
-                    self.cell_col,
-                    n_cells,
-                    dim,
-                    self.partitioned,
-                    self.quantized,
-                    self.versioned,
-                    default_nprobe,
-                    compacted_through,
-                )
-            ],
-            "id_col string, vec_col string, cell_col string, "
-            "n_cells int, dim int, partitioned boolean, "
-            "quantized boolean, versioned boolean, "
-            "default_nprobe int, compacted_through long",
-        )
-        self._stored_meta = self.wh.read_rows(self.meta_table)[0]
-
-    def _watermark(self) -> int | None:
-        """The compaction replay watermark, read FRESH per call (the
-        cached `_stored_meta` may predate a concurrent compact): from
-        the version pointer row in versioned mode (it commits with
-        the flip), else from the meta table. None = never compacted
-        (legacy rows simply lack the column)."""
-        if self.versioned:
-            if not self.wh.exists(self.version_table):
-                return None
-            row = self.wh.read_rows(self.version_table)[0]
-            wm = row.get("compacted_through")
-        else:
-            if not self.wh.exists(self.meta_table):
-                return None
-            row = self.wh.read_rows(self.meta_table)[0]
-            wm = row.get("compacted_through")
-        return None if wm is None else int(wm)
+        self._store.write_meta({
+            "id_col": self.id_col,
+            "vec_col": self.vec_col,
+            "cell_col": self.cell_col,
+            "n_cells": n_cells,
+            "dim": dim,
+            "partitioned": self.partitioned,
+            "quantized": self.quantized,
+            "versioned": self.versioned,
+            "default_nprobe": default_nprobe,
+            "compacted_through": compacted_through,
+        })
 
     def _store_cols(self, assigned: DataFrame) -> DataFrame:
         """Project the frame to its at-rest layout: float arrays, or
@@ -664,22 +607,15 @@ class IvfIndex:
 
     def _validate(
         self, frame: DataFrame | None = None, vec_col: str | None = None
-    ) -> None:
+    ) -> dict | None:
         """Fail loudly on a column-layout mismatch with the persisted
         store, and on a vector-length mismatch in `frame` — both would
-        otherwise degrade recall silently (see class docstring)."""
-        if not self.wh.exists(self.meta_table):
-            return  # pre-meta store: nothing to check
-        if not hasattr(self, "_stored_meta"):
-            self._stored_meta = self.wh.read_rows(self.meta_table)[0]
-        # metas written before the partitioned/quantized flags existed
-        # take the defaults they were built under
-        stored = {
-            "partitioned": False,
-            "quantized": False,
-            "versioned": False,
-            **self._stored_meta,
-        }
+        otherwise degrade recall silently (see class docstring).
+        Returns the meta row (read fresh — another writer may have
+        recalibrated or compacted), or None for a pre-meta store."""
+        stored = self._store.meta()
+        if stored is None:
+            return None  # pre-meta store: nothing to check
         mine = {
             "id_col": self.id_col,
             "vec_col": self.vec_col,
@@ -706,6 +642,7 @@ class IvfIndex:
                     "to the shorter length and degrade recall; fix the "
                     "input or rebuild the index"
                 )
+        return stored
 
     def build(
         self,
@@ -736,29 +673,15 @@ class IvfIndex:
         partitioner uncorrelated with the vector space degrades
         recall gracefully (never silently wrong — the probed cells
         still score exactly)."""
-        from ..sources.warehouse import (
-            atomic_overwrite,
-            guard_concurrent_writes,
-            guard_pointer_unmoved,
-            table_inventory,
-        )
+        from ..session import run_concurrently
+        from ..sources.warehouse import atomic_overwrite
 
-        # VERDICT r15 #1: a versioned REBUILD (build() recommits v1)
-        # must not silently abandon a concurrent absorb/delete that
-        # lands in the currently-served version while it runs —
-        # snapshot that version's file inventory now, re-check before
-        # committing
-        guard_tables: tuple = ()
-        pre_inv: frozenset = frozenset()
-        if self.versioned and self.wh.exists(self.version_table):
-            _cur = self._current_version()
-            guard_tables = (
-                self._table_names(_cur)[0],
-                self._tombstones_table(_cur),
-            )
-            pre_inv = table_inventory(self.wh, guard_tables)
-            self._build_guard_cur = _cur
-
+        # a versioned build recommits v1 (rebuilds of a live store go
+        # through retrain()); the flip snapshots the served version's
+        # inventory NOW, so a concurrent absorb/delete landing in it
+        # while this rebuild runs makes the commit refuse (VERDICT r15
+        # #1) instead of silently abandoning the rows
+        flip = self._store.begin("build", target=1)
         if assigned:
             if self.cell_col not in corpus.columns:
                 raise ValueError(
@@ -779,22 +702,12 @@ class IvfIndex:
                 max_iter,
             )
         assigned = assigned_df
-        vec_t, cent_t = self._table_names(1) if self.versioned else self._table_names()
-        if guard_tables and self._build_guard_cur == 1:
-            # v1-over-v1 rebuild: the overwrite below targets the
-            # guarded table itself, so this pre-overwrite check is the
-            # LAST point the comparison is meaningful — it covers the
-            # long phase (training/assignment actions above); the
-            # write+rename window that remains is the same one the
-            # non-versioned layout always had
-            guard_concurrent_writes(
-                self.wh, guard_tables, pre_inv,
-                f"IvfIndex('{self.name}').build",
-            )
+        vec_t, cent_t = flip.tables["vectors"], flip.tables["centroids"]
         parts = [self.cell_col]
         if self.partitioned:
             assigned = assigned.withColumn("__batch", F.lit("__build__"))
             parts.append("__batch")
+        flip.before_write()
         atomic_overwrite(
             self._store_cols(assigned),
             self.wh.path(vec_t),
@@ -805,8 +718,6 @@ class IvfIndex:
         # quantizer see the same vectors). The dim/ragged validation
         # scan reads the same persisted table independently — overlap
         # the two jobs (guide §2.6)
-        from ..session import run_concurrently
-
         _, dim = run_concurrently(
             lambda: self.wh.overwrite(
                 cent_t,
@@ -824,41 +735,22 @@ class IvfIndex:
             # parquet footers, no Spark job (r16)
             n_cells = self.wh.count_rows(cent_t)
         self._write_meta(n_cells, dim)
-        self._stored_meta = self.wh.read_rows(self.meta_table)[0]
         if nprobe_recall_target is not None:
             self.calibrate_nprobe(
                 recall_target=nprobe_recall_target,
                 seed=seed,
                 _tables=(vec_t, cent_t),
             )
-        if self.versioned:
-            if guard_tables and self._build_guard_cur != 1:
-                # full-window pre-flip re-check (the rebuild never
-                # touched version `cur`'s tables, so the inventory
-                # comparison stays valid right up to the flip)
-                guard_concurrent_writes(
-                    self.wh, guard_tables, pre_inv,
-                    f"IvfIndex('{self.name}').build",
-                )
-            # maintenance-vs-maintenance: the pointer must still be
-            # where this rebuild resolved it (a competing compact/
-            # retrain flip would be clobbered back to v1 otherwise)
-            guard_pointer_unmoved(
-                self._version_or_none(),
-                self._build_guard_cur if guard_tables else None,
-                f"IvfIndex('{self.name}').build",
-            )
-            # the commit point: v1 becomes visible only here
-            self._write_version(1, n_cells)
+        # the commit point: v1 becomes visible only here; the replay
+        # watermark resets (fresh lineage)
+        flip.commit({"n_cells": int(n_cells), "compacted_through": None})
         # a (re)build's corpus is the caller's statement of record:
         # stale tombstones must not filter it (versioned build
         # recommits v1, whose tombstone table may survive from the
         # previous lineage). Removed LAST — a crash beforehand leaves
         # the new corpus OVER-filtered (safe for takedowns, converges
         # on re-run), never an un-filtered window for deleted docs.
-        self.wh.remove_table(
-            self._tombstones_table(1 if self.versioned else None)
-        )
+        self.wh.remove_table(flip.tombstones)
 
     def absorb(self, new_vectors: DataFrame, batch=None) -> None:
         """Assign new vectors to their nearest EXISTING centroid and
@@ -882,30 +774,24 @@ class IvfIndex:
         if batch is not None:
             guard_sentinel_batch(batch)
         # version, tables, tombstones AND the replay watermark all
-        # resolve from ONE pointer read (_version_row) so the skip
-        # decision and the tables it protects are jointly consistent
-        # across a concurrent compact(live=True) flip (ADVICE r13)
-        if self.versioned:
-            _v, _wm = self._version_row()
-            vec_t, cent_t = self._table_names(_v)
-            tomb_t = self._tombstones_table(_v)
-        else:
-            _wm = self._watermark()
-            vec_t, cent_t = self._table_names()
-            tomb_t = self._tombstones_table()
+        # resolve from ONE head read so the skip decision and the
+        # tables it protects are jointly consistent across a
+        # concurrent compact(live=True) flip (ADVICE r13)
+        head = self._store.head()
+        vec_t = self._store.table("vectors", head.version)
+        cent_t = self._store.table("centroids", head.version)
         if (
             batch is not None
             and self.partitioned
-            and replay_skippable(batch, _wm)
+            and replay_skippable(batch, head.watermark)
         ):
             return
-        from .tombstones import anti_join_tombstones
-
         # a deleted id stays deleted until a purging compaction: the
         # ban is a size-gated anti-join against the tombstone id set
         # — deterministic, so replays converge
         new_vectors = anti_join_tombstones(
-            new_vectors, self.wh, tomb_t, self.id_col
+            new_vectors, self.wh, self._store.tombstones(head.version),
+            self.id_col,
         )
         cents = self.wh.read(cent_t)
         # assignment is per ROW, not per id: an id_col-partitioned
@@ -968,48 +854,7 @@ class IvfIndex:
         Returns {"deleted_ids": n} — ids actually tombstoned by THIS
         call."""
         self._validate()
-        if self.versioned:
-            v = self._current_version()
-            vec_t, _ = self._table_names(v)
-            tomb_t = self._tombstones_table(v)
-        else:
-            vec_t, _ = self._table_names()
-            tomb_t = self._tombstones_table()
-        if not self.wh.exists(vec_t):
-            # day-zero store: nothing indexed, nothing to tombstone
-            return {"deleted_ids": 0}
-        new_tombs = (
-            self.wh.read(vec_t)
-            .select(self.id_col)
-            .join(
-                # hint-free: a mass delete must not force-broadcast
-                # an unbounded caller frame (the erase_keys convention)
-                ids.select(self.id_col).distinct(),
-                self.id_col,
-                "left_semi",
-            )
-            .distinct()
-        )
-        if self.wh.exists(tomb_t):
-            new_tombs = new_tombs.join(
-                self.wh.read(tomb_t).select(self.id_col),
-                self.id_col,
-                "left_anti",
-            )
-        # r17 (VERDICT r16 item 5): the gate count rides the checkpoint
-        # materialization as an observed metric (exactly-once, computed
-        # inside the action) — the separate count() job is gone; see
-        # Bm25Index.delete for the full rationale.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new_tombs = new_tombs.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint()
-        n = obs.get["n"]
-        if n:
-            self.wh.append(tomb_t, new_tombs)
-        return {"deleted_ids": int(n)}
+        return self._store.delete_ids(ids, "vectors", self._store.version())
 
     def compact(
         self,
@@ -1049,184 +894,21 @@ class IvfIndex:
         Non-versioned stores persist the watermark BEFORE the data
         swap (either crash side is correct — see epochs.py);
         versioned stores write the collapsed tables off to the side
-        and commit watermark + layout in the one pointer flip.
+        and commit watermark + layout in the one pointer flip
+        (centroids carry over as a byte copy).
 
-        Returns {"stamps_merged", "compacted_through",
+        Returns {"stamps_merged", "compacted_through", "purged",
         "files_before", "files_after"}."""
-        from ..sources.warehouse import atomic_overwrite
-        from .epochs import (
-            SENTINEL_STAMPS,
-            collapse_epochs,
-            epoch_watermark,
-            parquet_file_count,
-        )
-
         self._validate()
-        if not self.partitioned:
-            raise ValueError(
-                f"IvfIndex '{self.name}': compact() is epoch-partition "
-                "maintenance — only a partitioned=True store "
-                "accumulates __batch partitions"
-            )
-        if not hasattr(self, "_stored_meta"):
-            raise ValueError(
-                f"IvfIndex '{self.name}': compact() needs the meta "
-                "marker to record the replay watermark — pre-meta "
-                "stores must rebuild once"
-            )
-        meta = self._stored_meta
-        if self.versioned:
-            # one pointer read → jointly consistent (version, wm)
-            cur, prev_wm = self._version_row()
-            cur_vec, cur_cent = self._table_names(cur)
-            new_vec, new_cent = self._table_names(cur + 1)
-            cur_tomb = self._tombstones_table(cur)
-            new_tomb = self._tombstones_table(cur + 1)
-            # snapshot the current version's file inventory before any
-            # reads — the pre-flip guard refuses if a concurrent
-            # absorb/delete lands mid-compaction (VERDICT r15 #1)
-            from ..sources.warehouse import table_inventory
-
-            cur_tables = (cur_vec, cur_tomb)
-            pre_inv = table_inventory(self.wh, cur_tables)
-        else:
-            cur_vec = new_vec = self.vectors_table
-            cur_cent = new_cent = self.centroids_table
-            cur_tomb = new_tomb = self._tombstones_table()
-        tombs = (
-            self.wh.read(cur_tomb) if self.wh.exists(cur_tomb) else None
-        )
         # raw at-rest read: quantized stores keep their int8 codes
-        # byte-identical through the rewrite. The stamp column is cast
-        # to string up front — partition-type inference reads an
-        # all-numeric-epoch store's __batch as int, and the
-        # restamp-to-__compacted__ union must not mix types
-        vecs = self.wh.read(cur_vec).withColumn(
-            "__batch", F.col("__batch").cast("string")
+        # byte-identical through the rewrite
+        return self._store.compact(
+            {"vectors": [self.cell_col, "__batch"]},
+            files_per_partition=files_per_partition,
+            through=through,
+            live=live,
+            partitioned=self.partitioned,
         )
-        # stamp enumeration from the hive directory names (r16): the
-        # same distinct set, driver-side — epochs.hive_partition_values
-        from .epochs import hive_partition_values
-
-        stamps = sorted(
-            hive_partition_values(self.wh.path(cur_vec), "__batch")
-        )
-        # integer-orderability over ALL stamps first (loud failure on
-        # ad-hoc ids), then the merge subset and its watermark
-        epoch_watermark(stamps)
-        if live:
-            # live-stream mode: derive the bound from the scanned
-            # stamps — merge everything below the NEWEST integer
-            # epoch, which is the only one a crashed absorb may have
-            # left partially written (epochs.py)
-            if through is not None:
-                raise ValueError(
-                    "compact(live=True) derives its own bound — pass "
-                    "through= or live=True, not both"
-                )
-            ints = [int(s) for s in stamps if s not in SENTINEL_STAMPS]
-            through = max(ints) - 1 if ints else None
-        merged = sorted(
-            s
-            for s in stamps
-            if s in SENTINEL_STAMPS
-            or through is None
-            or int(s) <= int(through)
-        )
-        wm = epoch_watermark(
-            merged,
-            prev_wm if self.versioned else self._watermark(),
-        )
-        # physical deletion (round 13): a FULL merge on a VERSIONED
-        # store applies the tombstones — rows purged, and the new
-        # version simply has no tombstone table, so 'tombstones
-        # applied' commits atomically inside the pointer flip. A
-        # bounded merge keeps un-merged epochs' raw rows, so the
-        # tombstones carry live; a non-versioned store cannot purge
-        # atomically and keeps filtering at serve time.
-        full = set(merged) == set(stamps)
-        purge = self.versioned and full and tombs is not None
-        files_before = parquet_file_count(self.wh.path(cur_vec))
-        collapsed = collapse_epochs(
-            vecs.filter(F.col("__batch").isin(merged)),
-            "__batch",
-            [self.cell_col, "__batch"],
-            self.id_col,
-            files_per_partition,
-        ).unionByName(vecs.filter(~F.col("__batch").isin(merged)))
-        if purge:
-            # size-gated, like serving (ADVICE r13): a mass takedown
-            # followed by a full compaction must degrade to a shuffle
-            # anti-join, never a forced unbounded broadcast
-            from .tombstones import anti_join_tombstones
-
-            collapsed = anti_join_tombstones(
-                collapsed, self.wh, cur_tomb, self.id_col
-            )
-        if self.versioned:
-            # EARLY maintenance-race check before the first write into
-            # the shared v(cur+1) paths (see guard_pointer_unmoved)
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"IvfIndex('{self.name}').compact",
-            )
-            atomic_overwrite(
-                collapsed,
-                self.wh.path(new_vec),
-                partition_by=[self.cell_col, "__batch"],
-            )
-            self.wh.copy_table(cur_cent, new_cent)
-            if tombs is not None and not purge:
-                # bounded merge: tombstones stay live on the new version
-                self.wh.overwrite(new_tomb, tombs)
-            # pre-flip re-check: a concurrent absorb/delete that landed
-            # in version `cur` after the snapshot would be abandoned by
-            # the flip — refuse loudly instead (VERDICT r15 #1)
-            from ..sources.warehouse import guard_concurrent_writes
-
-            guard_concurrent_writes(
-                self.wh, cur_tables, pre_inv,
-                f"IvfIndex('{self.name}').compact",
-            )
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"IvfIndex('{self.name}').compact",
-            )
-            # the commit point: collapsed tables + watermark flip as one
-            self._write_version(
-                cur + 1, meta["n_cells"], compacted_through=wm
-            )
-            self._write_meta(
-                meta["n_cells"],
-                meta["dim"],
-                default_nprobe=meta.get("default_nprobe"),
-                compacted_through=wm,
-            )
-        else:
-            # watermark FIRST: a crash after it leaves replays
-            # skipping partitions that still exist with identical rows
-            self._write_meta(
-                meta["n_cells"],
-                meta["dim"],
-                default_nprobe=meta.get("default_nprobe"),
-                compacted_through=wm,
-            )
-            atomic_overwrite(
-                collapsed,
-                self.wh.path(cur_vec),
-                partition_by=[self.cell_col, "__batch"],
-            )
-        return {
-            "stamps_merged": len(merged),
-            "compacted_through": wm,
-            "purged": purge,
-            "files_before": files_before,
-            "files_after": parquet_file_count(self.wh.path(new_vec)),
-        }
 
     def cell_skew(self) -> dict:
         """Measured cell-balance probe (VERDICT r10 item 5): one
@@ -1250,13 +932,11 @@ class IvfIndex:
         vector counts with another version's n_cells and report a
         phantom skew verdict."""
         self._validate()
-        if self.versioned:
-            vrow = self.wh.read_rows(self.version_table)[0]
-            vec_t = self._table_names(int(vrow["version"]))[0]
-        else:
-            vec_t = self.vectors_table
+        # the head row is the pointer (versioned) or the meta — either
+        # way the n_cells the layout was written with
+        head = self._store.head()
         counts = (
-            self.wh.read(vec_t)
+            self.wh.read(self._store.table("vectors", head.version))
             .groupBy(self.cell_col)
             .agg(F.count(F.lit(1)).alias("__n"))
         )
@@ -1265,14 +945,7 @@ class IvfIndex:
             F.count(F.lit(1)).alias("occupied"),
             F.max("__n").alias("max_cell"),
         ).first()
-        if self.versioned:
-            n_cells = int(vrow["n_cells"])
-        else:
-            n_cells = (
-                self._stored_meta["n_cells"]
-                if getattr(self, "_stored_meta", None)
-                else row["occupied"]
-            )
+        n_cells = head.row.get("n_cells") or row["occupied"]
         total = row["total"] or 0
         max_cell = row["max_cell"] or 0
         skew = (
@@ -1326,15 +999,17 @@ class IvfIndex:
         new tables — in versioned mode before the pointer flip, so a
         committed version always carries the default measured on its
         own geometry."""
-        self._validate()
-        if not getattr(self, "_stored_meta", None):
+        meta = self._validate()
+        if not meta:
             raise ValueError(
                 f"IvfIndex '{self.name}': calibrate_nprobe needs the "
                 "meta marker a build() writes — pre-meta stores have "
                 "no place to persist the measured default"
             )
         vec_t, cent_t = (
-            _tables if _tables is not None else self._table_names()
+            _tables
+            if _tables is not None
+            else tuple(self._store.tables().values())
         )
         corpus = self._read_vectors(vec_t)
         cents = self.wh.read(cent_t)
@@ -1394,7 +1069,6 @@ class IvfIndex:
             if recall >= recall_target or nprobe >= n_cells:
                 break
             nprobe = min(nprobe * 2, int(n_cells))
-        meta = self._stored_meta
         self._write_meta(
             meta["n_cells"],
             meta["dim"],
@@ -1449,56 +1123,29 @@ class IvfIndex:
         recall dip; the flat layout above stays the simpler default."""
         from ..sources.warehouse import atomic_overwrite
 
-        self._validate()
+        meta = self._validate()
         if n_cells is None:
-            n_cells = (
-                self._stored_meta["n_cells"]
-                if getattr(self, "_stored_meta", None)
-                else 16
-            )
+            n_cells = meta["n_cells"] if meta else 16
         # retrain PRESERVES row-level __batch stamps (docstring), so
         # replay targeting — and therefore the compaction watermark —
-        # carries forward; only build() resets it (fresh lineage)
-        if self.versioned:
-            # one pointer read → jointly consistent (version, wm)
-            cur, wm = self._version_row()
-            cur_vec, _ = self._table_names(cur)
-            new_vec, new_cent = self._table_names(cur + 1)
-            # snapshot the current version's file inventory BEFORE the
-            # corpus read — the pre-flip guard refuses if a concurrent
-            # absorb/delete lands mid-retrain (VERDICT r15 #1)
-            from ..sources.warehouse import table_inventory
-
-            cur_tables = (cur_vec, self._tombstones_table(cur))
-            pre_inv = table_inventory(self.wh, cur_tables)
-        else:
-            wm = self._watermark()
-            cur_vec = new_vec = self.vectors_table
-            new_cent = self.centroids_table
-        corpus = self._read_vectors(cur_vec).drop(self.cell_col)
+        # carries forward; only build() resets it (fresh lineage). One
+        # head read gives a jointly consistent (version, watermark),
+        # and the flip snapshots that version's inventory BEFORE the
+        # corpus read (VERDICT r15 #1)
+        head = self._store.head()
+        flip = self._store.begin("retrain", head)
+        cur_tomb = self._store.tombstones(head.version)
+        new_vec, new_cent = flip.tables["vectors"], flip.tables["centroids"]
+        corpus = self._read_vectors(
+            self._store.table("vectors", head.version)
+        ).drop(self.cell_col)
         assigned = ivf_build(
             corpus, n_cells, self.vec_col, self.cell_col, seed, max_iter
         )
         parts = [self.cell_col]
         if self.partitioned:
             parts.append("__batch")
-        if self.versioned:
-            # EARLY maintenance-race check, before the first write into
-            # the shared v(cur+1) table paths: a competing maintainer
-            # that already flipped would have its committed tables
-            # clobbered by the overwrite below — refuse now while its
-            # version is still intact. The pre-flip re-check further
-            # down covers the window between here and the flip (where
-            # a late competing flip loses only the refuser's scratch
-            # writes, which the winner's pointer never references —
-            # see guard_pointer_unmoved's docstring for the residual
-            # two-writers-in-the-write-window caveat).
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"IvfIndex('{self.name}').retrain",
-            )
+        flip.before_write()
         atomic_overwrite(
             self._store_cols(assigned),
             self.wh.path(new_vec),
@@ -1513,7 +1160,7 @@ class IvfIndex:
         self._write_meta(
             n_cells,
             self._frame_dim(self._read_vectors(new_vec), self.vec_col),
-            compacted_through=wm,
+            compacted_through=head.watermark,
         )
         if nprobe_recall_target is not None:
             # re-measure the serving default on the NEW geometry (and
@@ -1523,67 +1170,20 @@ class IvfIndex:
                 seed=seed,
                 _tables=(new_vec, new_cent),
             )
-        if self.versioned:
+        if flip.tombstones != cur_tomb and self.wh.exists(cur_tomb):
             # retrain preserves rows, so live tombstones must survive
             # the re-shard — copied BEFORE the flip, committed with it
-            cur_tomb = self._tombstones_table(cur)
-            if self.wh.exists(cur_tomb):
-                self.wh.copy_table(
-                    cur_tomb, self._tombstones_table(cur + 1)
-                )
-            # pre-flip re-check: a concurrent absorb/delete that landed
-            # in version `cur` after the snapshot would be abandoned by
-            # the flip — refuse loudly instead (VERDICT r15 #1)
-            from ..sources.warehouse import guard_concurrent_writes
-
-            guard_concurrent_writes(
-                self.wh, cur_tables, pre_inv,
-                f"IvfIndex('{self.name}').retrain",
-            )
-            from ..sources.warehouse import guard_pointer_unmoved
-
-            guard_pointer_unmoved(
-                self._version_or_none(), cur,
-                f"IvfIndex('{self.name}').retrain",
-            )
-            # the single commit point: everything above wrote OFF TO
-            # THE SIDE; serving keeps reading version `cur` until this
-            # one-row atomic overwrite flips the pointer
-            self._write_version(cur + 1, n_cells, compacted_through=wm)
-
-    def _write_version(
-        self,
-        version: int,
-        n_cells: int,
-        compacted_through: int | None = None,
-    ) -> None:
-        self.wh.overwrite_rows(
-            self.version_table,
-            [(int(version), int(n_cells), compacted_through)],
-            "version int, n_cells int, compacted_through long",
-        )
+            self.wh.copy_table(cur_tomb, flip.tombstones)
+        # the single commit point: everything above wrote OFF TO THE
+        # SIDE; serving keeps reading version `cur` until this one-row
+        # atomic overwrite flips the pointer
+        flip.commit({"n_cells": int(n_cells), "compacted_through": head.watermark})
 
     def prune_versions(self, keep: int = 1) -> list[str]:
-        '''Delete old versions' table directories (the versioned-
-        retrain garbage collector). `keep` retains the most recent
-        `keep` versions (default 1 = current only, the historical
-        behavior); pass keep=2 while lagging readers may still hold
-        plans resolved against the previous version — a lazy
-        DataFrame pins its resolved paths at plan time (the
-        Bm25Index/PqIndex knob, round 13: now uniform across the
-        family, which in-stream maintenance relies on). Returns the
-        removed table names.'''
-        if not self.versioned:
-            return []
-        if keep < 1:
-            raise ValueError("prune_versions keep must be >= 1")
-        cur = self._current_version()
-        removed = []
-        for v in range(1, cur - keep + 1):
-            for t in self._table_names(v) + (self._tombstones_table(v),):
-                if self.wh.remove_table(t):
-                    removed.append(t)
-        return removed
+        """Delete superseded versions' tables; keep=2 while lagging
+        readers may hold plans on the previous version (see
+        IndexStore.prune_versions)."""
+        return self._store.prune_versions(keep)
 
     def topk(
         self,
@@ -1603,30 +1203,24 @@ class IvfIndex:
         falling back to 2 when no calibration has run (the exact
         pre-round-12 behavior, so existing stores and callers are
         unchanged). An explicit int always wins."""
-        self._validate(queries, query_vec_col)
+        meta = self._validate(queries, query_vec_col)
         if nprobe is None:
-            nprobe = (
-                getattr(self, "_stored_meta", None) or {}
-            ).get("default_nprobe") or 2
+            nprobe = (meta or {}).get("default_nprobe") or 2
         # one pointer resolution for ALL tables: in versioned mode a
         # concurrent retrain flip cannot hand this query v(N) vectors
         # with v(N+1) centroids or tombstones (the joint-atomicity
         # gap the unversioned layout documents)
-        if self.versioned:
-            _v = self._current_version()
-            vec_t, cent_t = self._table_names(_v)
-            tomb_t = self._tombstones_table(_v)
-        else:
-            vec_t, cent_t = self._table_names()
-            tomb_t = self._tombstones_table()
-        from .tombstones import anti_join_tombstones
-
+        v = self._store.version()
+        cent_t = self._store.table("centroids", v)
         # deletion tombstones: the size-gated anti-join drops deleted
         # vectors from the probed rows (broadcast under the at-rest
         # byte cap, Catalyst-decided above it); purge happens at full
         # versioned compaction. No-op when no tombstone table exists.
         vectors = anti_join_tombstones(
-            self._read_vectors(vec_t), self.wh, tomb_t, self.id_col
+            self._read_vectors(self._store.table("vectors", v)),
+            self.wh,
+            self._store.tombstones(v),
+            self.id_col,
         )
         return ivf_topk(
             vectors,

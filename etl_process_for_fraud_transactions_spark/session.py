@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import threading
+import warnings
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -119,7 +120,9 @@ def run_concurrently(*thunks):
     scratch_shuffle_partitions scope) are shared by every thread, so
     set scopes OUTSIDE this call, never inside a thunk — enforced:
     a thunk that enters scratch_shuffle_partitions raises (r17,
-    VERDICT r16 item 4)."""
+    VERDICT r16 item 4). Each thread runs with the CALLER's Spark
+    local properties (job group, description, job tags), so the jobs
+    it submits stay attributed to the caller's operator."""
     from concurrent.futures import ThreadPoolExecutor
 
     def _guarded(t):
@@ -136,8 +139,29 @@ def run_concurrently(*thunks):
     if len(thunks) == 1:
         return [_guarded(thunks[0])()]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(_guarded(t)) for t in thunks]
+        futures = [
+            pool.submit(_inherit_local_properties(_guarded(t)))
+            for t in thunks
+        ]
         return [f.result() for f in futures]
+
+
+def _inherit_local_properties(fn):
+    """`fn` wrapped to run with the local properties of the thread that
+    wraps it: PySpark's pinned threads do not inherit them, so a job a
+    pool thread submits would otherwise carry no job group. The
+    properties are captured here, at wrap time, in the caller's
+    thread."""
+    from pyspark import SparkContext, inheritable_thread_target
+
+    if SparkContext._active_spark_context is None:
+        return fn
+    with warnings.catch_warnings():
+        # the callable form copies the SparkContext local properties;
+        # its warning concerns session tags, which the engine never
+        # sets (and a pool thread has no active session to pass)
+        warnings.simplefilter("ignore", UserWarning)
+        return inheritable_thread_target(fn)
 
 
 def cluster_profile(

@@ -99,6 +99,11 @@ CORE_TESTS = {
     "test_filter_new_matches_union_near_dedup",
     # sources: the atomic-overwrite contract everything sits on
     "test_atomic_overwrite_same_path",
+    # the shared index store (operators/store.py): delete gate,
+    # versioned compaction flip, unversioned watermark + as-of refusal
+    "test_delete_gate_stats_ride_the_checkpoint_materialization",
+    "test_bm25_versioned_compact_flips_pointer",
+    "test_neardup_compact_watermark_and_asof_refusal",
 }
 
 

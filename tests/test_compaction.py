@@ -80,6 +80,23 @@ def test_epoch_watermark_helpers():
         E.replay_skippable("b1", 3)
     with pytest.raises(ValueError, match="reserved"):
         E.guard_sentinel_batch("__compacted__")
+    # merge selection: (merged, watermark, full)
+    assert E.merge_selection({"__build__", "__compacted__"}, live=True) == (
+        ["__build__", "__compacted__"], None, True
+    )
+    with pytest.raises(ValueError, match="not both"):
+        E.merge_selection({"__build__", "3"}, through=2, live=True)
+    assert E.merge_selection({"__build__", "3", "4"}, through=1) == (
+        ["__build__"], None, False
+    )
+    with pytest.raises(ValueError, match="not an integer"):
+        E.merge_selection({"__build__", "2", "adhoc"})
+    assert E.merge_selection({"2", "3"}, through=2, prev=9) == (
+        ["2"], 9, False
+    )
+    assert E.merge_selection({"2", "3", "4"}, live=True, prev=1) == (
+        ["2", "3"], 3, False
+    )
 
 
 def test_ivf_compact_layout_replay_and_crash_window(spark, tmp_path):
@@ -142,7 +159,7 @@ def test_ivf_compact_layout_replay_and_crash_window(spark, tmp_path):
     # crash window: watermark persisted, swap never ran — simulate by
     # hand-writing the watermark ahead of the data (exactly compact()'s
     # first step), then replaying an already-present epoch
-    meta = idx._stored_meta
+    meta = idx._store.meta()
     idx._write_meta(
         meta["n_cells"], meta["dim"], compacted_through=99
     )
@@ -177,11 +194,11 @@ def test_ivf_versioned_compact_flips_pointer_and_retrain_carries_wm(
     for b in (1, 2):
         idx.absorb(_epoch(spark, [100 + b]), batch=b)
     before = _topk_snapshot(idx, spark)
-    v0 = idx._current_version()
+    v0 = idx._store.version()
 
     report = idx.compact()
-    assert idx._current_version() == v0 + 1
-    assert idx._watermark() == 2 == report["compacted_through"]
+    assert idx._store.version() == v0 + 1
+    assert idx._store.watermark() == 2 == report["compacted_through"]
     # old version intact until pruned (lagging readers)
     assert os.path.isdir(wh.path(f"{idx.name}_vectors_v{v0}"))
     assert _topk_snapshot(idx, spark) == before
@@ -191,7 +208,7 @@ def test_ivf_versioned_compact_flips_pointer_and_retrain_carries_wm(
 
     # retrain PRESERVES the watermark (stamps survive the re-shard)
     idx.retrain(n_cells=3, seed=7)
-    assert idx._watermark() == 2
+    assert idx._store.watermark() == 2
     idx.absorb(_epoch(spark, [102]), batch=2)  # still a replay
     assert wh.read(idx.vectors_table).count() == 8
 
@@ -201,7 +218,7 @@ def test_ivf_versioned_compact_flips_pointer_and_retrain_carries_wm(
     # build() resets the watermark: fresh lineage (versioned IvfIndex
     # rebuilds go through retrain(); build() recommits v1)
     idx.build(_epoch(spark, [1, 2, 3, 4]), n_cells=2, seed=1)
-    assert idx._watermark() is None
+    assert idx._store.watermark() is None
     idx.absorb(_epoch(spark, [50]), batch=1)  # epoch ids start over
     assert 50 in {r.vec_id for r in wh.read(idx.vectors_table).collect()}
 
@@ -350,21 +367,21 @@ def test_bm25_versioned_compact_flips_pointer(spark, tmp_path):
     for b in (1, 2):
         idx.absorb(_bm_epoch(spark, [100 + b]), batch=b)
     before = _bm_snapshot(idx)
-    v0 = idx._current_version()
+    v0 = idx._store.version()
 
     report = idx.compact()
-    assert idx._current_version() == v0 + 1
-    assert idx._watermark() == 2 == report["compacted_through"]
+    assert idx._store.version() == v0 + 1
+    assert idx._store.watermark() == 2 == report["compacted_through"]
     # old version intact until pruned (lagging readers)
     assert os.path.isdir(wh.path(f"{idx.name}_postings_v{v0}"))
     assert _bm_snapshot(idx) == before
     # id_type carried through the flip: day-zero empty frame keeps type
-    assert idx._version_row()[1] == "int"
+    assert idx._store.head().row["id_type"] == "int"
     idx.absorb(_bm_epoch(spark, [101]), batch=1)  # replay: no-op
     assert _bm_snapshot(idx) == before
     # rebuild resets the watermark: fresh epoch lineage
     idx.build(_bm_epoch(spark, [1, 2, 3]))
-    assert idx._watermark() is None
+    assert idx._store.watermark() is None
     idx.absorb(_bm_epoch(spark, [50]), batch=1)
     assert 50 in {
         r["doc_id"] for r in wh.read(idx.postings_table).collect()
@@ -506,11 +523,11 @@ def test_pq_versioned_compact_flips_pointer_calibrate_preserves_wm(
     for b in (1, 2):
         idx.absorb(_pq_epoch(spark, rows, [10 + b]), batch=b)
     before = _pq_snapshot(idx, spark, rows)
-    v0 = idx._current_version()
+    v0 = idx._store.version()
 
     report = idx.compact()
-    assert idx._current_version() == v0 + 1
-    _, layout = idx._version_row()
+    assert idx._store.version() == v0 + 1
+    _, layout = idx._store.head()
     assert layout["compacted_through"] == 2 == report["compacted_through"]
     # old version intact until pruned (lagging readers)
     assert os.path.isdir(wh.path(f"{idx.name}_codes_v{v0}"))
@@ -524,7 +541,7 @@ def test_pq_versioned_compact_flips_pointer_calibrate_preserves_wm(
         rows, "vec_id: long, embedding: array<double>"
     )
     idx.calibrate_nprobe(corpus, recall_target=0.5, n_probes=4, k=3)
-    _, layout = idx._version_row()
+    _, layout = idx._store.head()
     assert layout["compacted_through"] == 2
     assert layout["default_nprobe"] is not None
     idx.absorb(_pq_epoch(spark, rows, [12]), batch=2)  # still a replay
@@ -532,7 +549,7 @@ def test_pq_versioned_compact_flips_pointer_calibrate_preserves_wm(
 
     # rebuild resets the watermark: fresh epoch lineage
     idx.build(corpus, m=4, n_codes=8, seed=2, max_iter=10, n_cells=2)
-    _, layout = idx._version_row()
+    _, layout = idx._store.head()
     assert layout["compacted_through"] is None
     idx.absorb(_pq_epoch(spark, rows, [20]), batch=1)
     assert 920 in {
@@ -692,7 +709,7 @@ def test_neardup_compact_watermark_and_asof_refusal(spark, tmp_path):
     idx.bootstrap(
         _nd_docs(spark, [(i, t) for i, t in enumerate(_ND_BASE)])
     )
-    assert idx._watermark() is None
+    assert idx._store.watermark() is None
 
 
 def test_neardup_sink_skips_replay_of_merged_epoch(spark, tmp_path):
@@ -713,7 +730,7 @@ def test_neardup_sink_skips_replay_of_merged_epoch(spark, tmp_path):
     assert out_before == [100]
 
     idx.compact()
-    assert idx._watermark() == 1
+    assert idx._store.watermark() == 1
     # replay of the merged epoch: out_table and index untouched
     sink(_nd_epoch(spark, 1), 1)
     assert (
@@ -866,7 +883,7 @@ def test_sink_prune_keep_bounds_versions_in_stream(spark, tmp_path):
     for b in (1, 2, 3, 4, 5, 6):
         sink(_bm_epoch(spark, [100 + b]), b)
     snap = _bm_snapshot(idx)
-    cur = idx._current_version()
+    cur = idx._store.version()
     assert cur == 4  # v1 build + 3 in-stream compaction flips
     dirs = {
         d
@@ -892,7 +909,7 @@ def test_ivf_prune_versions_keep(spark, tmp_path):
     wh, idx = _ivf(spark, tmp_path, versioned=True)
     idx.retrain(n_cells=3, seed=7)
     idx.retrain(n_cells=3, seed=8)
-    assert idx._current_version() == 3
+    assert idx._store.version() == 3
     removed = idx.prune_versions(keep=2)
     assert all("_v1" in t for t in removed)
     assert os.path.isdir(wh.path(f"{idx.name}_vectors_v2"))

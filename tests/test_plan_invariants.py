@@ -652,3 +652,45 @@ def test_fs_access_confined_to_warehouse_epochs_and_file_sources():
         "direct FS access outside the warehouse/epochs/file-source "
         "boundary:\n" + "\n".join(offenders)
     )
+
+
+def test_store_lifecycle_written_once_in_the_index_store():
+    """The index-store lifecycle lives in operators/store.py, once: no
+    index family module defines the pointer-row read, a
+    prune_versions body or the delete gate's observed metrics, or
+    calls the version-flip guards directly. A family describes itself
+    to IndexStore as data (table roles, schemas, partition columns,
+    pointer payload) and keeps only its data work, so a change to the
+    store layout lands in one place, not four."""
+    import os
+    import re
+
+    ops = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "etl_process_for_fraud_transactions_spark",
+        "operators",
+    )
+    pattern = re.compile(
+        r"def _version_row\b|\bObservation\s*\(|range\(1, cur - keep"
+        r"|prune_versions keep must be"
+        r"|\b(?:guard_pointer_unmoved|guard_concurrent_writes"
+        r"|table_inventory)\s*\("
+    )
+    offenders = []
+    for fname in ("retrieval.py", "similarity.py", "pq.py",
+                  "dedup_incremental.py"):
+        with open(os.path.join(ops, fname)) as fh:
+            for i, line in enumerate(fh, 1):
+                if pattern.search(line.split("#", 1)[0]):
+                    offenders.append(f"{fname}:{i}: {line.strip()}")
+    assert offenders == [], (
+        "store lifecycle re-implemented in a family module:\n"
+        + "\n".join(offenders)
+    )
+    with open(os.path.join(ops, "store.py")) as fh:
+        store_src = fh.read()
+    for needle in ("def prune_versions(", "def head(", "def delete_gate(",
+                   "Observation(", "def compact("):
+        assert store_src.count(needle) == 1, needle
+    with open(os.path.join(ops, "epochs.py")) as fh:
+        assert fh.read().count("def merge_selection(") == 1

@@ -845,7 +845,7 @@ def test_ivf_index_build_assigned_external_quantizer(
         idx.build(corpus.drop("label"), assigned=True)
     idx.build(corpus, assigned=True)
     # the given assignment round-trips untouched; n_cells measured
-    assert idx._stored_meta["n_cells"] == 3
+    assert idx._store.meta()["n_cells"] == 3
     stored = {
         r.vec_id: r.label for r in wh.read(idx.vectors_table).collect()
     }

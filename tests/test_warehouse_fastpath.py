@@ -196,6 +196,25 @@ def test_run_concurrently_order_and_exceptions():
         run_concurrently(lambda: 1, boom)
 
 
+def test_run_concurrently_threads_keep_the_callers_job_group(spark):
+    """Pool threads inherit the caller's local properties: jobs the
+    thunks submit carry the caller's job group, so they stay
+    attributable to the operator that launched them."""
+    sc = spark.sparkContext
+    group = "run-concurrently-inherits"
+    sc.setJobGroup(group, "two thunks, one tiny action each")
+    try:
+        run_concurrently(
+            lambda: spark.range(3).collect(),
+            lambda: spark.range(5).collect(),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # one job per thunk, both under the caller's group
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
 def test_conf_scope_refused_inside_run_concurrently(spark):
     """Conf-scope rule pin (r17, VERDICT r16 item 4):
     spark.sql.shuffle.partitions is session-level and shared by every
