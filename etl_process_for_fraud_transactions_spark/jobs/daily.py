@@ -8,12 +8,24 @@ Differences by design (SURVEY.md §1.3, §2.12):
   dynamic partition overwrite on the batch date, so re-running a date
   is idempotent instead of silently duplicating (reference T1/T2);
 - errors fail fast (the reference swallows staging-cleanup errors and
-  keeps going, main.py:52-60 — a defect, not a capability).
+  keeps going, main.py:52-60 — a defect, not a capability);
+- the four SCD2 applications and the two fact appends write disjoint
+  tables, so they run as ONE concurrent wave (`session.run_concurrently`)
+  instead of the reference's fixed chain — at daily-batch sizes the
+  chain's wall is driver-side gaps between tiny jobs, not work. A
+  failing write fails the batch after the wave joins, before archival
+  and the report;
+- the report is one AQE-planned tree (`broadcast_rule_hits=False`: no
+  persist+count barriers, AQE sizes the rule-hit join-backs at
+  runtime) over the CURRENT dimension rows — in partitioned mode the
+  `_current` tables alone, since the closed tables only ever hold
+  `deleted_flg = true` rows, which the rules filter out anyway.
 """
 
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,7 +34,9 @@ from ..functions.core import ddmmyyyy_to_date
 from ..functions.observability import observed_counts
 from ..operators.report import assemble_report
 from ..operators.scd2 import scd2_apply
+from ..operators.scd2_partitioned import PartitionedScd2
 from ..schemas import DIMENSIONS
+from ..session import run_concurrently
 from ..sources.files import archive_batch_files, discover_batch_dates
 from ..sources.ingest import read_excel_sheet, read_semicolon_csv
 from ..sources.warehouse import Warehouse
@@ -156,11 +170,12 @@ class DailyFraudJob:
         Identical rows either way (5-batch equivalence,
         test_scd2_partitioned.py)."""
         if self.scd2_mode == "partitioned":
-            from ..operators.scd2_partitioned import PartitionedScd2
-
-            keys, attrs = DIMENSIONS[name]
-            return PartitionedScd2(self.wh, f"dim_{name}", keys, attrs).history()
+            return self._partitioned_dim(name).history()
         return self.wh.read(f"dim_{name}_hist")
+
+    def _partitioned_dim(self, name: str) -> PartitionedScd2:
+        keys, attrs = DIMENSIONS[name]
+        return PartitionedScd2(self.wh, f"dim_{name}", keys, attrs)
 
     # backwards-compatible private alias (pre-round-5 callers)
     _read_dim_history = read_dim_history
@@ -185,50 +200,60 @@ class DailyFraudJob:
         # every write below has actually consumed the input files.
 
         # SCD2 x4 (main.py:121-379)
-        for name, (keys, attrs) in DIMENSIONS.items():
+        def scd2(name: str) -> None:
             if self.scd2_mode == "partitioned":
-                from ..operators.scd2_partitioned import PartitionedScd2
-
-                PartitionedScd2(self.wh, f"dim_{name}", keys, attrs).apply_batch(
-                    staging[name], batch
-                )
-            else:
-                dim = (
-                    self.wh.read(f"dim_{name}_hist")
-                    if self.wh.exists(f"dim_{name}_hist")
-                    else None
-                )
-                hist = scd2_apply(dim, staging[name], keys, attrs, batch)
-                self.wh.overwrite(f"dim_{name}_hist", hist)
+                self._partitioned_dim(name).apply_batch(staging[name], batch)
+                return
+            keys, attrs = DIMENSIONS[name]
+            table = f"dim_{name}_hist"
+            dim = self.wh.read(table) if self.wh.exists(table) else None
+            self.wh.overwrite(table, scd2_apply(dim, staging[name], keys, attrs, batch))
 
         # blacklist fact: insert-if-absent (J9, main.py:382-394)
-        if self.wh.exists("fact_passport_blacklist"):
-            existing = self.wh.read("fact_passport_blacklist")
-            fresh = blacklist.join(existing, "passport_num", "left_anti")
+        def blacklist_fact() -> None:
+            fresh = blacklist
+            if self.wh.exists("fact_passport_blacklist"):
+                existing = self.wh.read("fact_passport_blacklist")
+                fresh = blacklist.join(existing, "passport_num", "left_anti")
             self.wh.append("fact_passport_blacklist", fresh)
-        else:
-            self.wh.append("fact_passport_blacklist", blacklist)
 
         # transactions fact: append, partitioned by batch date for
         # idempotent re-runs (main.py:397-409); row count + amount sum
         # observed on the write itself (the reference's print-audit,
         # main.py:410, without a second scan)
-        observed, obs = observed_counts(
-            trans.withColumn("batch_dt", batch),
-            f"fact_transactions_{date}",
-            F.sum("amt").alias("total_amt"),
+        def transactions_fact() -> None:
+            observed, obs = observed_counts(
+                trans.withColumn("batch_dt", batch),
+                f"fact_transactions_{date}",
+                F.sum("amt").alias("total_amt"),
+            )
+            self.wh.append_partitioned("fact_transactions", observed, "batch_dt")
+            self.metrics[f"fact_transactions_{date}"] = obs.get
+
+        # the six writes touch disjoint tables: one concurrent wave, so
+        # each write's tasks fill the cores the others' job barriers
+        # leave idle. The pool joins before anything below runs, and
+        # the first failure propagates from here — no archival, no
+        # report for a batch whose writes did not all land.
+        run_concurrently(
+            *(partial(scd2, name) for name in DIMENSIONS),
+            blacklist_fact,
+            transactions_fact,
         )
-        self.wh.append_partitioned("fact_transactions", observed, "batch_dt")
-        self.metrics[f"fact_transactions_{date}"] = obs.get
 
         # all file-backed frames are persisted to the warehouse now —
         # safe to archive the consumed inputs (main.py:20-30,117)
         if self.archive:
             archive_batch_files(self.input_dir, date)
 
-        # five-rule report over the full fact vs current dims (lazy
-        # current∪closed union in partitioned mode — never materialized)
-        dims = {name: self._read_dim_history(name) for name in DIMENSIONS}
+        # five-rule report over the full fact vs current dims. The rules
+        # keep only deleted_flg = false rows, and a partitioned dim's
+        # closed table holds none, so partitioned mode reads the current
+        # table alone (no closed-table scan in the plan)
+        if self.scd2_mode == "partitioned":
+            dims = {name: self._partitioned_dim(name).current() for name in DIMENSIONS}
+        else:
+            dims = {name: self.wh.read(f"dim_{name}_hist") for name in DIMENSIONS}
         fact = self.wh.read("fact_transactions")
         report = assemble_report(
             fact.drop("batch_dt"),
@@ -245,20 +270,19 @@ class DailyFraudJob:
                 if self.incremental_report
                 else None
             ),
-            # production job: measure before hinting — an unattended
-            # daily run must degrade to a shuffle join on a
-            # pathological day, not abort on a forced broadcast (the
-            # ~2x single-shot cost of the gate's persist barriers is
-            # the right trade here, unlike the interactive/bench path
-            # which keeps the single-tree True default)
-            broadcast_rule_hits=None,
+            # production job: an unattended daily run must degrade to a
+            # shuffle join on a pathological day, not abort on a forced
+            # broadcast — so no hint on the fact-scaled rule-hit
+            # join-backs; AQE picks their strategy from runtime sizes,
+            # and the report stays one plan with no persist barriers
+            broadcast_rule_hits=False,
         )
         self.wh.append_partitioned("rep_fraud", report, "report_dt")
-        # the measured hint gate persisted the two rule-hit frames;
+        # a tripped celebrity-key gate persists its hot-key frames;
         # release them now that the report is materialized — a
-        # multi-date run would otherwise accumulate one cached pair
-        # per batch until LRU pressure (re-collecting the returned
-        # report recomputes the rules, correctly, just uncached)
+        # multi-date run would otherwise accumulate them per batch
+        # until LRU pressure (re-collecting the returned report
+        # recomputes the rules, correctly, just uncached)
         for frame in getattr(report, "_rule_hit_frames", ()):
             frame.unpersist()
         return report

@@ -58,10 +58,11 @@ def assemble_report(
     - None: MEASURED hint (the cap_per_domain precedent) — persist +
       count each rule's hit set at plan-construction time and
       broadcast only when provably <= broadcast_max_rows. Costs the
-      single-plan subtree sharing; buys the no-abort guarantee. The
-      production default in jobs/daily.py.
+      single-plan subtree sharing and two eager jobs per report.
     - False: never hint; AQE decides from runtime stats after the
-      fact-side shuffle materializes.
+      fact-side shuffle materializes. Keeps the single plan AND the
+      no-abort guarantee (a large hit set degrades to a shuffle join);
+      what jobs/daily.py and the registered fraud_report row use.
 
     The reference builds the same dim chain twice (CTEs at 415-427 and
     437-443 — a missed reuse its own planner can't fix); here the

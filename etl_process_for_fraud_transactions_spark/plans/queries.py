@@ -782,13 +782,12 @@ def fraud_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # AQE decides the rule-hit join-backs from runtime stats: the
         # hit frames scale with the fact, so a forced hint aborts on a
         # hot-fraud day while AQE degrades to shuffle. jobs/daily.py
-        # keeps the measured gate (None); the always-hint True is for
-        # interactive single-shot use only.
+        # does the same; the always-hint True is for interactive
+        # single-shot use only.
         broadcast_rule_hits=False,
         # the celebrity-key probe is two plan-construction count()
         # jobs (~1s at sf0.1); the driver fixture provably has no key
-        # near HOT_KEY_MAX_ROWS, so the registered row opts out — the
-        # broadcast_rule_hits=False precedent. Production keeps the
-        # measured default (jobs/daily.py).
+        # near HOT_KEY_MAX_ROWS, so the registered row opts out.
+        # Production (jobs/daily.py) keeps the probe's default gate.
         hot_key_max_rows=None,
     )

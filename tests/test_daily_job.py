@@ -10,6 +10,9 @@ import os
 import pytest
 
 from etl_process_for_fraud_transactions_spark.jobs.daily import DailyFraudJob
+from etl_process_for_fraud_transactions_spark.operators.scd2_partitioned import (
+    PartitionedScd2,
+)
 
 
 @pytest.fixture()
@@ -106,6 +109,42 @@ def test_two_batch_pipeline(spark, fixture_dirs):
     # (full-fact rescan, as the reference does) land in day-2's partition
     fact = job.wh.read("fact_transactions")
     assert fact.count() == 4
+
+
+def test_failing_write_in_the_wave_keeps_inputs_and_skips_report(
+    spark, fixture_dirs, monkeypatch
+):
+    """The SCD2 x4 and fact writes run as one concurrent wave; one
+    failing write must fail the batch after the wave joins — the inputs
+    stay in the inbox (no archival) and no report partition is written,
+    so re-running the date once the fault is gone completes it."""
+    input_dir, source_dir, wh_dir, _ = fixture_dirs
+    apply_batch = PartitionedScd2.apply_batch
+
+    def failing_cards(self, stg, batch_date):
+        if self.table == "dim_cards":
+            raise RuntimeError("injected dim_cards failure")
+        return apply_batch(self, stg, batch_date)
+
+    monkeypatch.setattr(PartitionedScd2, "apply_batch", failing_cards)
+    inbox = sorted(os.listdir(input_dir))
+    job = DailyFraudJob(spark, input_dir, source_dir, wh_dir)
+    with pytest.raises(RuntimeError, match="injected dim_cards failure"):
+        job.run_batch("01012024")
+
+    assert sorted(os.listdir(input_dir)) == inbox
+    assert not os.path.exists(os.path.join(input_dir, "archive"))
+    assert not os.path.exists(
+        os.path.join(job.wh.path("rep_fraud"), "report_dt=2024-01-01")
+    )
+
+    monkeypatch.undo()
+    job.run_batch("01012024")
+    rep = {(r.passport, r.event_type) for r in job.wh.read("rep_fraud").collect()}
+    assert ("P200", "EXPIRED_PASSPORT") in rep
+    assert ("P100", "DIFF_CITY_SHORT_TIME") in rep
+    assert os.listdir(input_dir) == ["archive"]
+    assert job.wh.read("fact_passport_blacklist").count() == 1
 
 
 def test_partitioned_scd2_mode_equivalent_report(spark, fixture_dirs):

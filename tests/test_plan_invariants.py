@@ -518,9 +518,8 @@ def test_fraud_report_aqe_converts_rule_hit_joins(spark):
 
 
 def test_fraud_report_rule_hit_hints_are_measured(spark):
-    """assemble_report's measured mode (broadcast_rule_hits=None, the
-    jobs/daily.py production default — late round 9, the
-    cap_per_domain precedent) gates the rule-hit broadcasts on a
+    """assemble_report's measured mode (broadcast_rule_hits=None —
+    late round 9, the cap_per_domain precedent) gates the rule-hit broadcasts on a
     counted size: at test scale the hits fit and both hints fire;
     with broadcast_max_rows=-1 (unsatisfiable — at sf0.001 one rule
     has ZERO hits, and an empty frame provably fits any cap >= 0) the

@@ -6,13 +6,20 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from etl_process_for_fraud_transactions_spark.functions.core import ddmmyyyy_to_date
+from etl_process_for_fraud_transactions_spark.jobs.daily import DailyFraudJob
+from etl_process_for_fraud_transactions_spark.operators.report import assemble_report
 from etl_process_for_fraud_transactions_spark.operators.scd2 import scd2_apply
 from etl_process_for_fraud_transactions_spark.operators.scd2_partitioned import (
     PartitionedScd2,
 )
+from etl_process_for_fraud_transactions_spark.schemas import DIMENSIONS
 from etl_process_for_fraud_transactions_spark.sources.warehouse import Warehouse
+
+from .test_plan_invariants import _children, _node, _subtree
 
 BATCHES = [
     [("c1", "111"), ("c2", "222")],
@@ -71,18 +78,15 @@ def _hist_rows(df):
     )
 
 
-def test_five_batch_daily_job_modes_equivalent(spark, tmp_path):
-    """Full daily job over 5 batch dates in BOTH SCD2 modes (snapshot =
-    reference-exact full rewrite; partitioned = append-only closed +
-    bounded current): dim histories and fraud reports must agree row
-    for row when attribute tuples don't repeat across versions."""
+@pytest.fixture(scope="module")
+def five_batch_jobs(spark, tmp_path_factory):
+    """The full daily job over 5 batch dates in BOTH SCD2 modes
+    (snapshot = reference-exact full rewrite; partitioned = append-only
+    closed + bounded current), run once per module. Returns both jobs
+    plus the report DataFrame each returned for the last batch."""
     import shutil
 
-    from pyspark.sql import functions as F
-
-    from etl_process_for_fraud_transactions_spark.jobs.daily import DailyFraudJob
-    from etl_process_for_fraud_transactions_spark.schemas import DIMENSIONS
-
+    tmp_path = tmp_path_factory.mktemp("five_batch")
     input_dir = tmp_path / "incoming"
     source_dir = tmp_path / "sourcedb"
     input_dir.mkdir()
@@ -149,8 +153,14 @@ def test_five_batch_daily_job_modes_equivalent(spark, tmp_path):
             f"tx{i}a;2024-01-{i + 1:02d} 10:00:00;card0;PAY;10,00;SUCCESS;t1",
             f"tx{i}b;2024-01-{i + 1:02d} 10:30:00;card0;PAY;20,00;SUCCESS;t2",
         ])
-        snap.run_batch(date)
-        part.run_batch(date)
+        reports = {"snapshot": snap.run_batch(date), "partitioned": part.run_batch(date)}
+    return snap, part, reports, date
+
+
+def test_five_batch_daily_job_modes_equivalent(five_batch_jobs):
+    """Dim histories and fraud reports of the two SCD2 modes must agree
+    row for row when attribute tuples don't repeat across versions."""
+    snap, part, _, _ = five_batch_jobs
 
     assert _hist_rows(snap.wh.read("dim_clients_hist")) == _hist_rows(
         part._read_dim_history("clients")
@@ -166,6 +176,75 @@ def test_five_batch_daily_job_modes_equivalent(spark, tmp_path):
     assert rep_s == rep_p
     # c0's diff-city pairs fire every day in both modes
     assert len(rep_s) > 0
+
+
+def test_current_only_report_matches_measured_gate_over_full_history(five_batch_jobs):
+    """The partitioned job's report reads only the current dimension
+    tables and plans its rule-hit join-backs with AQE
+    (broadcast_rule_hits=False). Its last batch must equal the
+    measured-gate report (broadcast_rule_hits=None) over the full
+    current∪closed history on the same inputs. (Equality with the
+    snapshot job's reports, a full-history read, is
+    test_five_batch_daily_job_modes_equivalent's.)"""
+    _, part, reports, date = five_batch_jobs
+    # clients have closed versions, so dropping them from the read is
+    # load-bearing
+    assert part.wh.exists("dim_clients_closed")
+
+    dims = {name: part.read_dim_history(name) for name in DIMENSIONS}
+    batch = ddmmyyyy_to_date(date)
+    gated = assemble_report(
+        part.wh.read("fact_transactions").drop("batch_dt"),
+        dims["cards"], dims["accounts"], dims["clients"], dims["terminals"],
+        part.wh.read("fact_passport_blacklist"),
+        report_dt=batch,
+        broadcast_rule_hits=None,
+    )
+    try:
+        expected = sorted(map(tuple, gated.collect()))
+    finally:
+        for frame in gated._rule_hit_frames:
+            frame.unpersist()
+    assert expected
+    assert sorted(map(tuple, reports["partitioned"].collect())) == expected
+    written = part.wh.read("rep_fraud").filter(F.col("report_dt") == batch)
+    assert sorted(map(tuple, written.select(*gated.columns).collect())) == expected
+
+
+def test_daily_report_plan_reads_no_closed_table_and_hints_no_rule_hits(five_batch_jobs):
+    """The report run_batch returns in partitioned mode scans no
+    dim_*_closed table, and none of its broadcast hints sits on a
+    fact-scaled side: the hinted sides are the dimension and blacklist
+    reads, never the rule-hit join-backs, whose hit sets derive from
+    the fact and so carry its trans_id."""
+    _, part, reports, _ = five_batch_jobs
+    report = reports["partitioned"]
+    assert part.wh.exists("dim_clients_closed")
+    assert [f for f in report.inputFiles() if "_closed" in f] == []
+    assert any("dim_clients_current" in f for f in report.inputFiles())
+
+    lines = report._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    assert not any("_closed" in line for line in lines)
+    n_hints = 0
+    for i, line in enumerate(lines):
+        n = _node(line)
+        if not n.startswith("Join"):
+            continue
+        kids = _children(lines, i)
+        sides = []
+        if "leftHint=(strategy=broadcast)" in n and kids:
+            sides.append(kids[0])
+        if "rightHint=(strategy=broadcast)" in n and len(kids) > 1:
+            sides.append(kids[1])
+        for k in sides:
+            n_hints += 1
+            sub = [_node(l) for l in _subtree(lines, k)]
+            assert not any(s.startswith("InMemoryRelation") for s in sub), sub[0]
+            leaves = [s for s in sub if s.startswith("Relation ")]
+            assert leaves, sub[0]
+            for leaf in leaves:
+                assert "trans_id#" not in leaf, leaf
+    assert n_hints > 0  # the dim/blacklist hints are still there
 
 
 def test_tuple_repeat_divergence_documented(spark, tmp_path):
