@@ -15,7 +15,7 @@ Differences by design (SURVEY.md §1.3, §2.12):
   chain's wall is driver-side gaps between tiny jobs, not work. A
   failing write fails the batch after the wave joins, before archival
   and the report;
-- the report is one AQE-planned tree (`broadcast_rule_hits=False`: no
+- the report is one AQE-planned tree (`assemble_report`: no
   persist+count barriers, AQE sizes the rule-hit join-backs at
   runtime) over the CURRENT dimension rows — in partitioned mode the
   `_current` tables alone, since the closed tables only ever hold
@@ -177,9 +177,6 @@ class DailyFraudJob:
         keys, attrs = DIMENSIONS[name]
         return PartitionedScd2(self.wh, f"dim_{name}", keys, attrs)
 
-    # backwards-compatible private alias (pre-round-5 callers)
-    _read_dim_history = read_dim_history
-
     # -- per-date pipeline --------------------------------------------------
 
     def run_batch(self, date: str) -> DataFrame:
@@ -270,12 +267,6 @@ class DailyFraudJob:
                 if self.incremental_report
                 else None
             ),
-            # production job: an unattended daily run must degrade to a
-            # shuffle join on a pathological day, not abort on a forced
-            # broadcast — so no hint on the fact-scaled rule-hit
-            # join-backs; AQE picks their strategy from runtime sizes,
-            # and the report stays one plan with no persist barriers
-            broadcast_rule_hits=False,
         )
         self.wh.append_partitioned("rep_fraud", report, "report_dt")
         # a tripped celebrity-key gate persists its hot-key frames;
@@ -283,7 +274,7 @@ class DailyFraudJob:
         # multi-date run would otherwise accumulate them per batch
         # until LRU pressure (re-collecting the returned report
         # recomputes the rules, correctly, just uncached)
-        for frame in getattr(report, "_rule_hit_frames", ()):
+        for frame in report._gate_persists:
             frame.unpersist()
         return report
 

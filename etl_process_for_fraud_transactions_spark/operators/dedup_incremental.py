@@ -552,8 +552,8 @@ class NearDupIndex:
             )
         # the batch bucket frame is EXACTLY n_docs * bands rows, so
         # the broadcast gate is one cheap count of the raw batch — no
-        # materialization barrier (cf. the persist+count the report
-        # gate needs). Hinted (the normal daily shape) the corpus
+        # materialization barrier (cf. cap_per_domain's persist+count
+        # gate). Hinted (the normal daily shape) the corpus
         # never shuffles; an over-cap batch degrades to a shuffle
         # join on (band_id, band_hash) instead of a forced multi-GB
         # broadcast that cannot fall back.

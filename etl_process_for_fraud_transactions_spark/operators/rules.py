@@ -105,14 +105,14 @@ def resolve_transactions(
     return out.select(*cols)
 
 
-def attach_terminal_city(resolved: DataFrame, terminals: DataFrame, how: str = "inner") -> DataFrame:
+def attach_terminal_city(resolved: DataFrame, terminals: DataFrame) -> DataFrame:
     """Join terminal_city onto an already client-resolved frame
     (broadcast). Lets the 3-hop chain be computed once and shared
     between the terminal-needing rule 4 and the terminal-free rule 5
     (the reference recomputes the chain per CTE — main.py:415-443)."""
     term = F.broadcast(_current(terminals).alias("term"))
     r = resolved.alias("rsv")
-    return r.join(term, F.col("rsv.terminal") == F.col("term.terminal_id"), how).select(
+    return r.join(term, F.col("rsv.terminal") == F.col("term.terminal_id"), "inner").select(
         "rsv.*", F.col("term.terminal_city").alias("terminal_city")
     )
 
@@ -131,13 +131,12 @@ def _hot_keys(
     base: DataFrame,
     key_col: str,
     max_rows: int | None,
-    broadcast_max_rows: int = 4_000_000,
     persist_registry: list | None = None,
 ) -> DataFrame | None:
     """Measured per-key density probe (the small_graph_max_edges /
     cap_per_domain gate pattern): one bounded aggregate counts rows
     per key; keys above `max_rows` come back as a frame (broadcast
-    only when the measured count proves it small, unhinted otherwise),
+    when the measured count is <= 4M keys, unhinted otherwise),
     None when no key trips. The count() is an eager action at
     plan-construction time — the measurement is the point; a route
     decided without data is the trap this gate replaces. The persisted
@@ -164,7 +163,7 @@ def _hot_keys(
         return None
     if persist_registry is not None:
         persist_registry.append(hot)
-    return F.broadcast(hot) if n <= broadcast_max_rows else hot
+    return F.broadcast(hot) if n <= 4_000_000 else hot
 
 
 def _diff_city_pair_hits(base: DataFrame, salt=None) -> DataFrame:
@@ -272,7 +271,7 @@ def rule_diff_city_1h_window(
     callers pass `persist_registry` (assemble_report does); a DIRECT
     caller without one gets the handle surfaced on the returned
     DataFrame as `result._gate_persists` — unpersist those after
-    materializing, the report._rule_hit_frames convention — so
+    materializing (assemble_report's handle has the same name) — so
     repeated direct calls no longer accumulate cached frames until
     LRU pressure."""
     base = resolved.select(

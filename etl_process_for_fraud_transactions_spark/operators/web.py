@@ -396,8 +396,8 @@ def cap_per_domain(
     doubt, keep the measured default (None). The over-cap aggregate
     still persists either way (three downstream joins reference it).
     For back-compat the frames are
-    ALSO exposed on the result as `_persisted_frames` (the report.py
-    `_rule_hit_frames` precedent), but that attribute lives on THIS
+    ALSO exposed on the result as `_persisted_frames` (the
+    `_gate_persists` precedent of the fraud rules and report), but that attribute lives on THIS
     DataFrame object only: any further transformation
     (select/filter/withColumn) returns a new DataFrame without it, so
     capture it before wrapping the result — or use the tuple return,

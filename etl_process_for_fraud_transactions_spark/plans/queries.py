@@ -779,12 +779,6 @@ def fraud_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         d["blacklist"],
         # string, not DATE: see date_arithmetic_probe docstring
         report_dt=F.lit("2024-01-31"),
-        # AQE decides the rule-hit join-backs from runtime stats: the
-        # hit frames scale with the fact, so a forced hint aborts on a
-        # hot-fraud day while AQE degrades to shuffle. jobs/daily.py
-        # does the same; the always-hint True is for interactive
-        # single-shot use only.
-        broadcast_rule_hits=False,
         # the celebrity-key probe is two plan-construction count()
         # jobs (~1s at sf0.1); the driver fixture provably has no key
         # near HOT_KEY_MAX_ROWS, so the registered row opts out.

@@ -106,13 +106,15 @@ CORE_TESTS = {
     "test_neardup_compact_watermark_and_asof_refusal",
     # the daily batch: a failing write in the concurrent wave neither
     # archives nor reports; the current-only, AQE-planned report
-    # matches the snapshot job and the measured gate over full
-    # history, and its plan scans no closed table and hints no
-    # rule-hit join-back (the last three share one 5-batch fixture)
+    # matches the snapshot job and the report over full history, and
+    # its plan scans no closed table and hints no rule-hit join-back
+    # (the last three share one 5-batch fixture); the report surfaces
+    # the celebrity-gate frames run_batch releases
     "test_failing_write_in_the_wave_keeps_inputs_and_skips_report",
     "test_five_batch_daily_job_modes_equivalent",
-    "test_current_only_report_matches_measured_gate_over_full_history",
+    "test_current_only_report_matches_full_history_report",
     "test_daily_report_plan_reads_no_closed_table_and_hints_no_rule_hits",
+    "test_report_surfaces_gate_persists_for_release",
 }
 
 
@@ -138,9 +140,10 @@ CORE_TESTS = {
 # Matching is by node name (Class::name[param] after the module path),
 # so parametrized entries exclude only the heavy parameters (e.g. 5 of
 # the 50 oracle checks; the driver's own CORRECTNESS gate re-runs all
-# 50 independently of pytest). A renamed test silently leaves this
-# set and re-enters the default tier — caught at the next round-edge
-# duration capture, never a lost pin.
+# 50 independently of pytest). A renamed test would silently leave this
+# set (or CORE_TESTS) and change tier, so
+# test_plan_invariants.py::test_tier_lists_name_existing_tests fails
+# on any entry that no longer names a test.
 # ---------------------------------------------------------------------------
 
 SLOW_TESTS = {

@@ -97,7 +97,7 @@ def test_two_batch_pipeline(spark, fixture_dirs):
     )
     job.run()
 
-    hist = job._read_dim_history("clients")
+    hist = job.read_dim_history("clients")
     # no attribute changed between batches -> still exactly one version per client
     assert hist.count() == 3
 
@@ -173,7 +173,7 @@ def test_partitioned_scd2_mode_equivalent_report(spark, fixture_dirs):
     shutil.move(tmp, os.path.join(source_dir, "clients.parquet"))
     write_batch("02012024", ["tx8;2024-01-02 09:00:00;card1;PAY;5,00;SUCCESS;t1"], [])
     job.run()
-    hist = job._read_dim_history("clients")
+    hist = job.read_dim_history("clients")
     c1 = sorted((r.phone, str(r.effective_to), r.deleted_flg) for r in hist.filter("client_id='c1'").collect())
     assert c1 == [("+71", "2024-01-02", True), ("+71P", "3000-01-01", False)]
 
@@ -220,7 +220,7 @@ def test_scd2_change_across_batches(spark, fixture_dirs, tmp_path):
     write_batch("02012024", ["tx9;2024-01-02 09:00:00;card1;PAY;5,00;SUCCESS;t1"], [])
     job.run()
 
-    hist = job._read_dim_history("clients")
+    hist = job.read_dim_history("clients")
     c1 = sorted(
         (r.phone, str(r.effective_from), str(r.effective_to), r.deleted_flg)
         for r in hist.filter("client_id = 'c1'").collect()

@@ -458,9 +458,9 @@ def test_every_broadcast_hint_roots_at_a_bounded_frame(spark):
 
 
 def test_fraud_report_demo_hints_only_bounded_dims(spark):
-    """Round 10 directive 1: the registered fraud_report row and the
-    flagship entry() pass broadcast_rule_hits=False — the rule-hit
-    join-backs (fact-scaled) carry NO hint; every remaining hint roots
+    """Round 10 directive 1: in the registered fraud_report row and the
+    flagship entry() the rule-hit join-backs (fact-scaled) carry NO
+    hint (assemble_report never hints them); every remaining hint roots
     at a spark.range dim / blacklist frame. AQE still broadcasts the
     runtime-small hit sets at test scale."""
     from etl_process_for_fraud_transactions_spark.plans.flagship import (
@@ -501,7 +501,7 @@ def test_fraud_report_demo_hints_only_bounded_dims(spark):
 
 
 def test_fraud_report_aqe_converts_rule_hit_joins(spark):
-    """Round 10: with broadcast_rule_hits=False the rule-hit
+    """Round 10: unhinted (assemble_report's one mode), the rule-hit
     join-backs start as sort-merge in the STATIC plan and AQE must
     convert them from runtime stats — the no-abort degrade the hint
     drop bought may cost a shuffle at the 100x framing, but at test
@@ -515,43 +515,6 @@ def test_fraud_report_aqe_converts_rule_hit_joins(spark):
     final = plan.split("== Initial Plan ==")[0]
     assert "SortMergeJoin" not in final
     assert "BroadcastHashJoin" in final
-
-
-def test_fraud_report_rule_hit_hints_are_measured(spark):
-    """assemble_report's measured mode (broadcast_rule_hits=None —
-    late round 9, the cap_per_domain precedent) gates the rule-hit broadcasts on a
-    counted size: at test scale the hits fit and both hints fire;
-    with broadcast_max_rows=-1 (unsatisfiable — at sf0.001 one rule
-    has ZERO hits, and an empty frame provably fits any cap >= 0) the
-    SAME plan drops exactly those two hints (dim hints stay) and the
-    result is unchanged."""
-    from etl_process_for_fraud_transactions_spark.operators.report import (
-        assemble_report,
-    )
-    from etl_process_for_fraud_transactions_spark.plans import analog
-    from pyspark.sql import functions as F
-
-    d = analog.domain_frames(spark, SF_SMALL)
-    args = (d["transactions"], d["cards"], d["accounts"], d["clients"],
-            d["terminals"], d["blacklist"])
-
-    hinted = assemble_report(
-        *args, report_dt=F.lit("2024-01-31"), broadcast_rule_hits=None
-    )
-    unhinted = assemble_report(
-        *args, report_dt=F.lit("2024-01-31"), broadcast_rule_hits=None,
-        broadcast_max_rows=-1,
-    )
-    n_hints = lambda df: (
-        df._jdf.queryExecution().optimizedPlan().toString()
-        .count("strategy=broadcast")
-    )
-    # exactly the two rule-hit hints are measurement-dependent
-    assert n_hints(hinted) - n_hints(unhinted) == 2
-    key = lambda r: tuple(str(v) for v in r)
-    assert sorted(map(key, hinted.collect())) == sorted(
-        map(key, unhinted.collect())
-    )
 
 
 def test_zscore_stats_back_join_broadcasts_via_aqe(spark):
@@ -693,3 +656,29 @@ def test_store_lifecycle_written_once_in_the_index_store():
         assert store_src.count(needle) == 1, needle
     with open(os.path.join(ops, "epochs.py")) as fh:
         assert fh.read().count("def merge_selection(") == 1
+
+
+def test_tier_lists_name_existing_tests():
+    """conftest's CORE_TESTS / SLOW_TESTS match tests by node name, so
+    a renamed test would silently leave its tier. Every entry (with any
+    `Class::` and `[param]` stripped) must still be a `def test_…` in
+    some tests/test_*.py, and every CORE_MODULES entry a test module.
+    Pure Python: no Spark session."""
+    import glob
+    import os
+
+    from . import conftest
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    modules = {
+        os.path.basename(p)[: -len(".py")]: p
+        for p in glob.glob(os.path.join(here, "test_*.py"))
+    }
+    defined = set()
+    for path in modules.values():
+        with open(path) as fh:
+            defined |= set(re.findall(r"^\s*def (test_\w+)\(", fh.read(), re.M))
+    assert sorted(conftest.CORE_MODULES - modules.keys()) == []
+    for tier in (conftest.CORE_TESTS, conftest.SLOW_TESTS):
+        names = {entry.split("::")[-1].split("[")[0] for entry in tier}
+        assert sorted(names - defined) == []

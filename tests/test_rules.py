@@ -316,8 +316,8 @@ class TestCelebrityKeyGate:
 
 def test_hot_key_gate_persist_registry_releases_deterministically(spark):
     """A tripped probe's persisted hot-key frame lands in the caller's
-    persist_registry (and, through assemble_report, in
-    _rule_hit_frames) so a per-date loop releases it instead of
+    persist_registry (and, through assemble_report, in the report's
+    _gate_persists) so a per-date loop releases it instead of
     accumulating cache until LRU pressure — the cap_per_domain
     deterministic-release lesson applied to the gate."""
     from etl_process_for_fraud_transactions_spark.operators.rules import (
@@ -353,6 +353,46 @@ def test_hot_key_gate_persist_registry_releases_deterministically(spark):
         df, hot_key_max_rows=1000, persist_registry=registry2
     ).collect()
     assert registry2 == []
+
+
+def test_report_surfaces_gate_persists_for_release(spark):
+    """assemble_report threads both windowed rules' probes into one
+    registry and surfaces it as `result._gate_persists` — the handle
+    jobs/daily.py releases after each batch. With hot_key_max_rows=0
+    both probes trip (every key routes to the pair join), and the
+    routed report equals the ungated one row for row."""
+    from pyspark.sql import functions as F
+
+    from etl_process_for_fraud_transactions_spark.operators.report import (
+        assemble_report,
+    )
+    from etl_process_for_fraud_transactions_spark.plans import analog
+
+    from .conftest import SF_SMALL
+
+    def _live(frame):
+        lvl = frame.storageLevel
+        return lvl.useMemory or lvl.useDisk
+
+    d = analog.domain_frames(spark, SF_SMALL)
+    args = (d["transactions"], d["cards"], d["accounts"], d["clients"],
+            d["terminals"], d["blacklist"])
+    routed = assemble_report(*args, report_dt=F.lit("2024-01-31"),
+                             hot_key_max_rows=0)
+    ungated = assemble_report(*args, report_dt=F.lit("2024-01-31"),
+                              hot_key_max_rows=None)
+    key = lambda df: sorted(tuple(str(v) for v in r) for r in df.collect())
+    got = key(routed)
+    assert got and got == key(ungated)
+    assert ungated._gate_persists == ()
+
+    handles = routed._gate_persists
+    assert len(handles) == 2
+    # each frame's OWN storage level (see the registry test above)
+    assert all(_live(f) for f in handles)
+    for f in handles:
+        f.unpersist(blocking=True)
+    assert not any(_live(f) for f in handles)
 
 
 def test_hot_key_gate_direct_caller_gets_release_handle(spark):

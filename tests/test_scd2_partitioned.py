@@ -163,12 +163,12 @@ def test_five_batch_daily_job_modes_equivalent(five_batch_jobs):
     snap, part, _, _ = five_batch_jobs
 
     assert _hist_rows(snap.wh.read("dim_clients_hist")) == _hist_rows(
-        part._read_dim_history("clients")
+        part.read_dim_history("clients")
     )
     # every dim agrees, not just clients
     for name in DIMENSIONS:
         s_rows = sorted(map(tuple, snap.wh.read(f"dim_{name}_hist").collect()))
-        p_rows = sorted(map(tuple, part._read_dim_history(name).collect()))
+        p_rows = sorted(map(tuple, part.read_dim_history(name).collect()))
         assert s_rows == p_rows, name
 
     rep_s = sorted(map(tuple, snap.wh.read("rep_fraud").collect()))
@@ -178,11 +178,9 @@ def test_five_batch_daily_job_modes_equivalent(five_batch_jobs):
     assert len(rep_s) > 0
 
 
-def test_current_only_report_matches_measured_gate_over_full_history(five_batch_jobs):
+def test_current_only_report_matches_full_history_report(five_batch_jobs):
     """The partitioned job's report reads only the current dimension
-    tables and plans its rule-hit join-backs with AQE
-    (broadcast_rule_hits=False). Its last batch must equal the
-    measured-gate report (broadcast_rule_hits=None) over the full
+    tables. Its last batch must equal assemble_report over the full
     current∪closed history on the same inputs. (Equality with the
     snapshot job's reports, a full-history read, is
     test_five_batch_daily_job_modes_equivalent's.)"""
@@ -193,22 +191,21 @@ def test_current_only_report_matches_measured_gate_over_full_history(five_batch_
 
     dims = {name: part.read_dim_history(name) for name in DIMENSIONS}
     batch = ddmmyyyy_to_date(date)
-    gated = assemble_report(
+    full = assemble_report(
         part.wh.read("fact_transactions").drop("batch_dt"),
         dims["cards"], dims["accounts"], dims["clients"], dims["terminals"],
         part.wh.read("fact_passport_blacklist"),
         report_dt=batch,
-        broadcast_rule_hits=None,
     )
     try:
-        expected = sorted(map(tuple, gated.collect()))
+        expected = sorted(map(tuple, full.collect()))
     finally:
-        for frame in gated._rule_hit_frames:
+        for frame in full._gate_persists:
             frame.unpersist()
     assert expected
     assert sorted(map(tuple, reports["partitioned"].collect())) == expected
     written = part.wh.read("rep_fraud").filter(F.col("report_dt") == batch)
-    assert sorted(map(tuple, written.select(*gated.columns).collect())) == expected
+    assert sorted(map(tuple, written.select(*full.columns).collect())) == expected
 
 
 def test_daily_report_plan_reads_no_closed_table_and_hints_no_rule_hits(five_batch_jobs):
