@@ -4,9 +4,13 @@ SCD2 x4 -> facts -> five-rule report), per SURVEY.md §3.1.
 
 Differences by design (SURVEY.md §1.3, §2.12):
 - staging is ephemeral DataFrames (no truncate/reload dance);
-- dims are snapshot-rewritten atomically; facts are appended with
-  dynamic partition overwrite on the batch date, so re-running a date
-  is idempotent instead of silently duplicating (reference T1/T2);
+- dims are stored by operators.scd2_partitioned: each batch's closed
+  versions go to their own `effective_to` partition by dynamic
+  partition overwrite, and the bounded current table is rewritten
+  atomically; facts are appended with dynamic partition overwrite on
+  the batch date. So re-running a date — also one whose batch failed
+  between a dim's two writes — is idempotent instead of silently
+  duplicating (reference T1/T2);
 - errors fail fast (the reference swallows staging-cleanup errors and
   keeps going, main.py:52-60 — a defect, not a capability);
 - the four SCD2 applications and the two fact appends write disjoint
@@ -17,9 +21,9 @@ Differences by design (SURVEY.md §1.3, §2.12):
   and the report;
 - the report is one AQE-planned tree (`assemble_report`: no
   persist+count barriers, AQE sizes the rule-hit join-backs at
-  runtime) over the CURRENT dimension rows — in partitioned mode the
-  `_current` tables alone, since the closed tables only ever hold
-  `deleted_flg = true` rows, which the rules filter out anyway.
+  runtime) over the CURRENT dimension rows — the `_current` tables
+  alone, since the closed tables only ever hold `deleted_flg = true`
+  rows, which the rules filter out anyway.
 """
 
 from __future__ import annotations
@@ -33,7 +37,6 @@ from pyspark.sql import functions as F
 from ..functions.core import ddmmyyyy_to_date
 from ..functions.observability import observed_counts
 from ..operators.report import assemble_report
-from ..operators.scd2 import scd2_apply
 from ..operators.scd2_partitioned import PartitionedScd2
 from ..schemas import DIMENSIONS
 from ..session import run_concurrently
@@ -55,7 +58,6 @@ class DailyFraudJob:
         warehouse_root: str,
         archive: bool = True,
         incremental_report: bool = False,
-        scd2_mode: str = "partitioned",
     ):
         self.spark = spark
         self.input_dir = input_dir
@@ -64,17 +66,6 @@ class DailyFraudJob:
         self.archive = archive
         #: per-batch write metrics keyed by '<table>_<date>' (observe-based)
         self.metrics: dict[str, dict] = {}
-        # "partitioned" (default): append-only closed partition +
-        # bounded current rewrite (operators.scd2_partitioned) — the
-        # at-scale mode where the per-batch cost stops growing with
-        # history depth (BASELINE.md growth table: flat vs snapshot's
-        # linear climb; 5-batch equivalence proven in
-        # test_scd2_partitioned.py). "snapshot": full-history rewrite
-        # per batch (reference-exact tuple-IN semantics,
-        # operators.scd2) — kept for reference-faithful replay.
-        if scd2_mode not in ("snapshot", "partitioned"):
-            raise ValueError(f"scd2_mode must be snapshot|partitioned, got {scd2_mode!r}")
-        self.scd2_mode = scd2_mode
         # The reference re-scans the FULL transaction fact for every
         # daily report (main.py:544), re-flagging all history into each
         # new report_dt partition — O(total history) per day. The
@@ -160,20 +151,13 @@ class DailyFraudJob:
         raise ValueError(name)
 
     def read_dim_history(self, name: str) -> DataFrame:
-        """The stable, layout-independent read API for dimension
-        history. Since the default flipped to scd2_mode='partitioned'
-        (round 4), the on-disk layout differs by mode — snapshot mode
-        keeps the single `dim_<name>_hist` table, partitioned mode
-        stores append-only closed partitions plus a current table —
-        so external consumers should read through this method (or pin
-        scd2_mode='snapshot') instead of wh.read('dim_<name>_hist').
-        Identical rows either way (5-batch equivalence,
-        test_scd2_partitioned.py)."""
-        if self.scd2_mode == "partitioned":
-            return self._partitioned_dim(name).history()
-        return self.wh.read(f"dim_{name}_hist")
+        """A dimension's full history (current ∪ closed versions), the
+        rows the snapshot operator operators.scd2 would hold
+        (5-batch equivalence, test_scd2_partitioned.py). Read through
+        this method, not the `dim_<name>_current` / `_closed` tables."""
+        return self._dim(name).history()
 
-    def _partitioned_dim(self, name: str) -> PartitionedScd2:
+    def _dim(self, name: str) -> PartitionedScd2:
         keys, attrs = DIMENSIONS[name]
         return PartitionedScd2(self.wh, f"dim_{name}", keys, attrs)
 
@@ -198,13 +182,7 @@ class DailyFraudJob:
 
         # SCD2 x4 (main.py:121-379)
         def scd2(name: str) -> None:
-            if self.scd2_mode == "partitioned":
-                self._partitioned_dim(name).apply_batch(staging[name], batch)
-                return
-            keys, attrs = DIMENSIONS[name]
-            table = f"dim_{name}_hist"
-            dim = self.wh.read(table) if self.wh.exists(table) else None
-            self.wh.overwrite(table, scd2_apply(dim, staging[name], keys, attrs, batch))
+            self._dim(name).apply_batch(staging[name], batch)
 
         # blacklist fact: insert-if-absent (J9, main.py:382-394)
         def blacklist_fact() -> None:
@@ -244,13 +222,10 @@ class DailyFraudJob:
             archive_batch_files(self.input_dir, date)
 
         # five-rule report over the full fact vs current dims. The rules
-        # keep only deleted_flg = false rows, and a partitioned dim's
-        # closed table holds none, so partitioned mode reads the current
-        # table alone (no closed-table scan in the plan)
-        if self.scd2_mode == "partitioned":
-            dims = {name: self._partitioned_dim(name).current() for name in DIMENSIONS}
-        else:
-            dims = {name: self.wh.read(f"dim_{name}_hist") for name in DIMENSIONS}
+        # keep only deleted_flg = false rows, and a dim's closed table
+        # holds none, so the report reads the current tables alone (no
+        # closed-table scan in the plan)
+        dims = {name: self._dim(name).current() for name in DIMENSIONS}
         fact = self.wh.read("fact_transactions")
         report = assemble_report(
             fact.drop("batch_dt"),

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .rangejoin import bucketed_abs_window_self_join, bucketed_interval_self_join
+from .scd2 import scd2_current
 
 HOUR_US = 3600 * 1_000_000
 TWENTY_MIN_US = 20 * 60 * 1_000_000
@@ -48,12 +49,6 @@ EV_EXPIRED_PASSPORT = "EXPIRED_PASSPORT"
 EV_INVALID_CONTRACT = "INVALID_CONTRACT"
 EV_DIFF_CITY = "DIFF_CITY_SHORT_TIME"
 EV_BRUTE_FORCE = "BRUTE_FORCE_ATTEMPT"
-
-
-def _current(dim: DataFrame) -> DataFrame:
-    # deleted_flg=false residual applied pre-join so it pushes down to
-    # the dim scan (main.py:423-426).
-    return dim.filter(F.col("deleted_flg") == F.lit(False))
 
 
 def resolve_transactions(
@@ -73,9 +68,9 @@ def resolve_transactions(
     disambiguation where the reference leaned on `SELECT *`).
     """
     t = trans.alias("t")
-    car = F.broadcast(_current(cards).alias("car"))
-    acc = F.broadcast(_current(accounts).alias("acc"))
-    cl = F.broadcast(_current(clients).alias("cl"))
+    car = F.broadcast(scd2_current(cards).alias("car"))
+    acc = F.broadcast(scd2_current(accounts).alias("acc"))
+    cl = F.broadcast(scd2_current(clients).alias("cl"))
     out = (
         t.join(car, F.col("t.card_num") == F.col("car.card_num"), how)
         .join(acc, F.col("car.account_num") == F.col("acc.account_num"), how)
@@ -99,7 +94,7 @@ def resolve_transactions(
         F.col("cl.phone").alias("phone"),
     ]
     if terminals is not None:
-        term = F.broadcast(_current(terminals).alias("term"))
+        term = F.broadcast(scd2_current(terminals).alias("term"))
         out = out.join(term, F.col("t.terminal") == F.col("term.terminal_id"), how)
         cols.append(F.col("term.terminal_city").alias("terminal_city"))
     return out.select(*cols)
@@ -110,7 +105,7 @@ def attach_terminal_city(resolved: DataFrame, terminals: DataFrame) -> DataFrame
     (broadcast). Lets the 3-hop chain be computed once and shared
     between the terminal-needing rule 4 and the terminal-free rule 5
     (the reference recomputes the chain per CTE — main.py:415-443)."""
-    term = F.broadcast(_current(terminals).alias("term"))
+    term = F.broadcast(scd2_current(terminals).alias("term"))
     r = resolved.alias("rsv")
     return r.join(term, F.col("rsv.terminal") == F.col("term.terminal_id"), "inner").select(
         "rsv.*", F.col("term.terminal_city").alias("terminal_city")

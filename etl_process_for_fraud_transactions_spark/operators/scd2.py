@@ -22,6 +22,11 @@ Semantics preserved exactly, including the reference's quirks:
 - superseded versions get deleted_flg=true ("not current"), which is
   what downstream reads filter on (main.py:423-426).
 
+The change join (`changed_rows`), the close-out projection
+(`close_out`) and the new-version leg (`new_versions`) are written
+once here; operators.scd2_partitioned builds from the same three and
+differs only in its close-out rule (by key, not by tuple).
+
 Scale design: the dim is re-derived as `untouched ∪ closed ∪ fresh` and
 snapshot-swapped (sources.warehouse.atomic_overwrite). All three legs
 are hash joins on the business key (or the attribute tuple); with dims
@@ -33,19 +38,73 @@ and is idempotent per batch date.
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import or_
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import open_ended_date
+from ..functions.core import any_attr_differs, open_ended_date
 
 
-def _changed(attrs: Sequence[str]) -> Column:
-    """Null-unsafe `<>` OR-chain (main.py:151-157)."""
-    return reduce(or_, [F.col(f"d.{a}") != F.col(f"s.{a}") for a in attrs])
+def _key_match(key_cols: Sequence[str]) -> list[Column]:
+    return [F.col(f"d.{k}") == F.col(f"s.{k}") for k in key_cols]
+
+
+def _open_rows(d: DataFrame) -> DataFrame:
+    return d.filter(F.col("d.effective_to") == open_ended_date())
+
+
+def changed_rows(
+    cur: DataFrame,
+    stg: DataFrame,
+    key_cols: Sequence[str],
+    attr_cols: Sequence[str],
+    cols: Sequence[str],
+) -> DataFrame:
+    """The distinct `cols` of the current rows (aliased `d`) whose key
+    joins a staging row (aliased `s`) with a tracked attribute changed
+    under the null-unsafe `<>` (main.py:144-157). distinct mirrors
+    IN-subquery set semantics."""
+    return (
+        cur.join(stg, on=_key_match(key_cols), how="inner")
+        .filter(any_attr_differs("d", "s", attr_cols))
+        .select(*[F.col(f"d.{c}").alias(c) for c in cols])
+        .distinct()
+    )
+
+
+def close_out(rows: DataFrame, all_cols: Sequence[str], batch_date: Column) -> DataFrame:
+    """The closed version of `rows`: effective_to = batch,
+    deleted_flg = true (main.py:146-150)."""
+    return rows.select(
+        *all_cols,
+        F.col("effective_from"),
+        batch_date.alias("effective_to"),
+        F.lit(True).alias("deleted_flg"),
+    )
+
+
+def new_versions(
+    d: DataFrame,
+    stg: DataFrame,
+    key_cols: Sequence[str],
+    attr_cols: Sequence[str],
+    batch_date: Column,
+) -> DataFrame:
+    """Staging rows (aliased `s`) with no open row in `d` for their key,
+    or whose open row changed: each becomes a fresh current version
+    (main.py:162-191)."""
+    all_cols = [*key_cols, *attr_cols]
+    return (
+        stg.join(_open_rows(d), on=_key_match(key_cols), how="left")
+        .filter(F.col(f"d.{key_cols[0]}").isNull() | any_attr_differs("d", "s", attr_cols))
+        .select(
+            *[F.col(f"s.{c}").alias(c) for c in all_cols],
+            batch_date.alias("effective_from"),
+            open_ended_date().alias("effective_to"),
+            F.lit(False).alias("deleted_flg"),
+        )
+    )
 
 
 def scd2_bootstrap(stg: DataFrame, batch_date: Column) -> DataFrame:
@@ -75,52 +134,23 @@ def scd2_apply(
         return scd2_bootstrap(stg, batch_date)
 
     all_cols = [*key_cols, *attr_cols]
-    key = list(key_cols)
-    cur_filter = F.col("d.effective_to") == open_ended_date()
-
     d = dim.alias("d")
     s = stg.alias("s")
 
-    # Tuples to close: current rows joined to staging on the key where
-    # any tracked attribute differs (main.py:144-160). distinct mirrors
-    # IN-subquery set semantics.
-    close_tuples = (
-        d.filter(cur_filter)
-        .join(s, on=[F.col(f"d.{k}") == F.col(f"s.{k}") for k in key], how="inner")
-        .filter(_changed(attr_cols))
-        .select(*[F.col(f"d.{c}").alias(c) for c in all_cols])
-        .distinct()
-    )
-
-    closing = dim.join(close_tuples, on=all_cols, how="left_semi").select(
-        *all_cols,
-        F.col("effective_from"),
-        batch_date.alias("effective_to"),
-        F.lit(True).alias("deleted_flg"),
-    )
+    # tuple-IN close-out: every row whose full tuple is a changed
+    # current tuple closes
+    close_tuples = changed_rows(_open_rows(d), s, key_cols, attr_cols, all_cols)
+    closing = close_out(dim.join(close_tuples, on=all_cols, how="left_semi"), all_cols, batch_date)
     untouched = dim.join(close_tuples, on=all_cols, how="left_anti").select(
         *all_cols, "effective_from", "effective_to", "deleted_flg"
     )
-
-    # New versions: staging rows with no current row for the key, or a
-    # current row with changed attributes (main.py:162-191).
-    cur = d.filter(cur_filter)
-    key_match = [F.col(f"s.{k}") == F.col(f"d.{k}") for k in key]
-    fresh = (
-        s.join(cur, on=key_match, how="left")
-        .filter(F.col(f"d.{key[0]}").isNull() | _changed(attr_cols))
-        .select(
-            *[F.col(f"s.{c}").alias(c) for c in all_cols],
-            batch_date.alias("effective_from"),
-            open_ended_date().alias("effective_to"),
-            F.lit(False).alias("deleted_flg"),
-        )
-    )
+    fresh = new_versions(d, s, key_cols, attr_cols, batch_date)
 
     return untouched.unionByName(closing).unionByName(fresh)
 
 
 def scd2_current(dim: DataFrame) -> DataFrame:
     """Current (not superseded) rows, as downstream queries read them
-    (main.py:423-426)."""
+    (main.py:423-426). Applied before a join, the residual pushes down
+    to the dimension scan."""
     return dim.filter(F.col("deleted_flg") == F.lit(False))

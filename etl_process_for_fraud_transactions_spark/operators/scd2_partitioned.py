@@ -1,49 +1,50 @@
 """Partitioned SCD2 maintenance: O(current + changes) per batch
-instead of O(full history).
+instead of O(full history) — the layout the daily job stores its
+dimensions in.
 
 operators.scd2 rewrites the whole history table per batch — simple and
 correct, but at 1e9-row dimensions with years of versions the rewrite
-cost is dominated by rows that can never change again. This variant
+cost is dominated by rows that can never change again. This layout
 exploits the SCD2 state machine: a CLOSED row (deleted_flg=true,
-effective_to != open sentinel) is immutable*, so the table is stored
-partitioned by `is_current`:
+effective_to != open sentinel) is immutable*, so each dimension is two
+tables:
 
-- closed partition : append-only — each batch appends just the newly
-  closed versions;
-- current partition: rewritten — bounded by the live key count, not by
-  history depth.
+- `<table>_closed`: partitioned by `effective_to` — each batch writes
+  just the versions it closed into its own date partition, by dynamic
+  partition overwrite, so a re-run of the date replaces that
+  partition instead of appending the same versions twice;
+- `<table>_current`: rewritten atomically — bounded by the live key
+  count, not by history depth.
+
+The closed partition is written before the current table is swapped.
+A batch that dies between the two leaves `_current` on the old rows;
+re-running the date recomputes the same closing rows into the same
+partition, so the history converges without duplicates.
 
 (*) The reference's tuple-IN close-out (main.py:144-145) can, in a
 pathological case, re-stamp a historical row whose full attribute
 tuple coincides with a closing current row. The snapshot operator
-reproduces that quirk bit-for-bit; this partitioned variant
-deliberately uses key-based close-out (the intended semantics, and
-what every SCD2 implementation does) — equivalent whenever attribute
-tuples don't repeat across versions of the same key, which the golden
-and property tests assert for realistic histories.
+reproduces that quirk bit-for-bit; this layout deliberately closes by
+key (the intended semantics, and what every SCD2 implementation does)
+— equivalent whenever attribute tuples don't repeat across versions
+of the same key, which the golden and property tests assert for
+realistic histories. The change join, the close-out projection and the
+new-version leg are operators.scd2's.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import or_
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.core import open_ended_date
 from ..sources.warehouse import Warehouse
-from .scd2 import scd2_bootstrap
-
-
-def _changed(attrs: Sequence[str]) -> Column:
-    return reduce(or_, [F.col(f"d.{a}") != F.col(f"s.{a}") for a in attrs])
+from .scd2 import changed_rows, close_out, new_versions, scd2_bootstrap
 
 
 class PartitionedScd2:
     """SCD2 over a warehouse table stored as <table>_current (rewritten
-    per batch) and <table>_closed (append-only)."""
+    per batch) and <table>_closed (one partition per closing date)."""
 
     def __init__(self, wh: Warehouse, table: str, key_cols: Sequence[str], attr_cols: Sequence[str]):
         self.wh = wh
@@ -65,36 +66,16 @@ class PartitionedScd2:
             return
         cur = self.wh.read(self._cur)
         d, s = cur.alias("d"), stg.alias("s")
-        key_match = [F.col(f"d.{k}") == F.col(f"s.{k}") for k in self.keys]
 
         all_cols = [*self.keys, *self.attrs]
-        changed_keys = (
-            d.join(s, on=key_match, how="inner")
-            .filter(_changed(self.attrs))
-            .select(*[F.col(f"d.{k}").alias(k) for k in self.keys])
-            .distinct()
-        )
-        # newly closed versions -> append to the immutable partition
-        closing = cur.join(changed_keys, self.keys, "left_semi").select(
-            *all_cols,
-            F.col("effective_from"),
-            batch_date.alias("effective_to"),
-            F.lit(True).alias("deleted_flg"),
-        )
-        self.wh.append(self._closed, closing)
+        changed_keys = changed_rows(d, s, self.keys, self.attrs, self.keys)
+        # newly closed versions -> this batch's closed partition
+        closing = close_out(cur.join(changed_keys, self.keys, "left_semi"), all_cols, batch_date)
+        self.wh.append_partitioned(self._closed, closing, "effective_to")
 
         # surviving current rows + fresh versions -> rewrite current
         untouched = cur.join(changed_keys, self.keys, "left_anti")
-        fresh = (
-            s.join(d.filter(F.col("d.effective_to") == open_ended_date()), on=key_match, how="left")
-            .filter(F.col(f"d.{self.keys[0]}").isNull() | _changed(self.attrs))
-            .select(
-                *[F.col(f"s.{c}").alias(c) for c in all_cols],
-                batch_date.alias("effective_from"),
-                open_ended_date().alias("effective_to"),
-                F.lit(False).alias("deleted_flg"),
-            )
-        )
+        fresh = new_versions(d, s, self.keys, self.attrs, batch_date)
         self.wh.overwrite(self._cur, untouched.unionByName(fresh))
 
     def history(self) -> DataFrame:

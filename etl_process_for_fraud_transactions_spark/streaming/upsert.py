@@ -9,8 +9,11 @@ per epoch (the checkpoint records the batch id; re-run batches are
 re-offered with the same id for dedup).
 
 This closes the loop between streaming/filestream (dated-file stream)
-and operators.scd2 / jobs.daily: the same SCD2 snapshot rewrite that
-the daily job runs per date runs here per micro-batch.
+and operators.scd2: each micro-batch runs the reference-exact snapshot
+rewrite (`scd2_apply`, tuple-IN close-out) over one history table. The
+daily job (jobs.daily) stores its dims in the partitioned layout
+instead (operators.scd2_partitioned: key-based close-out), built from
+the same change, close-out and new-version legs.
 """
 
 from __future__ import annotations

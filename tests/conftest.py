@@ -105,13 +105,16 @@ CORE_TESTS = {
     "test_bm25_versioned_compact_flips_pointer",
     "test_neardup_compact_watermark_and_asof_refusal",
     # the daily batch: a failing write in the concurrent wave neither
-    # archives nor reports; the current-only, AQE-planned report
-    # matches the snapshot job and the report over full history, and
-    # its plan scans no closed table and hints no rule-hit join-back
-    # (the last three share one 5-batch fixture); the report surfaces
-    # the celebrity-gate frames run_batch releases
+    # archives nor reports; a re-run after a failed current-table swap
+    # keeps one closed version; the dim histories and the current-only,
+    # AQE-planned report match a scd2_apply + assemble_report reference
+    # and the report over full history, and the report's plan scans no
+    # closed table and hints no rule-hit join-back (the last three share
+    # one 5-batch fixture); the report surfaces the celebrity-gate
+    # frames run_batch releases
     "test_failing_write_in_the_wave_keeps_inputs_and_skips_report",
-    "test_five_batch_daily_job_modes_equivalent",
+    "test_rerun_after_current_swap_fails_keeps_one_closed_version",
+    "test_five_batch_daily_job_matches_snapshot_operator",
     "test_current_only_report_matches_full_history_report",
     "test_daily_report_plan_reads_no_closed_table_and_hints_no_rule_hits",
     "test_report_surfaces_gate_persists_for_release",
@@ -170,7 +173,6 @@ SLOW_TESTS = {
     "test_sink_prune_keep_bounds_versions_in_stream",
     # tests/test_daily_job.py
     "test_incremental_report_only_batch_rows",
-    "test_partitioned_scd2_mode_equivalent_report",
     "test_scd2_change_across_batches",
     "test_two_batch_pipeline",
     # tests/test_decontaminate.py
@@ -287,7 +289,7 @@ SLOW_TESTS = {
     "test_null_attr_is_not_a_change",
     "test_three_batch_replay",
     # tests/test_scd2_partitioned.py
-    "test_five_batch_daily_job_modes_equivalent",
+    "test_five_batch_daily_job_matches_snapshot_operator",
     "test_partitioned_matches_snapshot",
     "test_tuple_repeat_divergence_documented",
     # tests/test_similarity.py

@@ -13,6 +13,7 @@ from etl_process_for_fraud_transactions_spark.jobs.daily import DailyFraudJob
 from etl_process_for_fraud_transactions_spark.operators.scd2_partitioned import (
     PartitionedScd2,
 )
+from etl_process_for_fraud_transactions_spark.sources.warehouse import Warehouse
 
 
 @pytest.fixture()
@@ -147,37 +148,6 @@ def test_failing_write_in_the_wave_keeps_inputs_and_skips_report(
     assert job.wh.read("fact_passport_blacklist").count() == 1
 
 
-def test_partitioned_scd2_mode_equivalent_report(spark, fixture_dirs):
-    input_dir, source_dir, wh_dir, write_batch = fixture_dirs
-    # archive must stay on: with unconsumed batch-1 files still in the
-    # inbox, run() would re-discover and re-apply 01012024 against the
-    # mutated source before reaching batch 2
-    job = DailyFraudJob(
-        spark, input_dir, source_dir, wh_dir + "_p", scd2_mode="partitioned"
-    )
-    job.run()
-    rep = {(r.passport, r.event_type) for r in job.wh.read("rep_fraud").collect()}
-    assert ("P200", "EXPIRED_PASSPORT") in rep
-    assert ("P100", "DIFF_CITY_SHORT_TIME") in rep
-    # second batch with a source change -> history via current∪closed
-    import pyspark.sql.functions as F
-    import shutil, os
-
-    clients = spark.read.parquet(os.path.join(source_dir, "clients.parquet"))
-    mutated = clients.withColumn(
-        "phone", F.when(F.col("client_id") == "c1", "+71P").otherwise(F.col("phone"))
-    )
-    tmp = wh_dir + "_ptmp"
-    mutated.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(os.path.join(source_dir, "clients.parquet"))
-    shutil.move(tmp, os.path.join(source_dir, "clients.parquet"))
-    write_batch("02012024", ["tx8;2024-01-02 09:00:00;card1;PAY;5,00;SUCCESS;t1"], [])
-    job.run()
-    hist = job.read_dim_history("clients")
-    c1 = sorted((r.phone, str(r.effective_to), r.deleted_flg) for r in hist.filter("client_id='c1'").collect())
-    assert c1 == [("+71", "2024-01-02", True), ("+71P", "3000-01-01", False)]
-
-
 def test_incremental_report_only_batch_rows(spark, fixture_dirs):
     input_dir, source_dir, wh_dir, write_batch = fixture_dirs
     job = DailyFraudJob(
@@ -199,33 +169,79 @@ def test_incremental_report_only_batch_rows(spark, fixture_dirs):
     assert day1.count() > 0  # day-1 partition intact
 
 
-def test_scd2_change_across_batches(spark, fixture_dirs, tmp_path):
+def _change_phone(spark, source_dir, client_id, phone):
+    """Rewrite the source clients table with one client's phone changed."""
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    path = os.path.join(source_dir, "clients.parquet")
+    mutated = spark.read.parquet(path).withColumn(
+        "phone", F.when(F.col("client_id") == client_id, phone).otherwise(F.col("phone"))
+    )
+    tmp = path + "_tmp"
+    mutated.write.mode("overwrite").parquet(tmp)
+    shutil.rmtree(path)
+    shutil.move(tmp, path)
+
+
+def _c1_versions(job):
+    return sorted(
+        (r.phone, str(r.effective_from), str(r.effective_to), r.deleted_flg)
+        for r in job.read_dim_history("clients").filter("client_id = 'c1'").collect()
+    )
+
+
+def test_scd2_change_across_batches(spark, fixture_dirs):
     input_dir, source_dir, wh_dir, write_batch = fixture_dirs
     job = DailyFraudJob(spark, input_dir, source_dir, wh_dir)
     job.run()
 
     # mutate source: c1 changes phone
-    import pyspark.sql.functions as F
-
-    clients = spark.read.parquet(os.path.join(source_dir, "clients.parquet"))
-    mutated = clients.withColumn(
-        "phone", F.when(F.col("client_id") == "c1", "+71NEW").otherwise(F.col("phone"))
-    )
-    mutated.write.mode("overwrite").parquet(str(tmp_path / "clients2.parquet"))
-    import shutil
-
-    shutil.rmtree(os.path.join(source_dir, "clients.parquet"))
-    shutil.move(str(tmp_path / "clients2.parquet"), os.path.join(source_dir, "clients.parquet"))
-
+    _change_phone(spark, source_dir, "c1", "+71NEW")
     write_batch("02012024", ["tx9;2024-01-02 09:00:00;card1;PAY;5,00;SUCCESS;t1"], [])
     job.run()
 
-    hist = job.read_dim_history("clients")
-    c1 = sorted(
-        (r.phone, str(r.effective_from), str(r.effective_to), r.deleted_flg)
-        for r in hist.filter("client_id = 'c1'").collect()
-    )
-    assert c1 == [
+    assert _c1_versions(job) == [
+        ("+71", "2024-01-01", "2024-01-02", True),
+        ("+71NEW", "2024-01-02", "3000-01-01", False),
+    ]
+
+
+def test_rerun_after_current_swap_fails_keeps_one_closed_version(
+    spark, fixture_dirs, monkeypatch
+):
+    """A dim's closing rows are written before its current table is
+    swapped. If the swap fails, `_current` keeps the old rows and a
+    re-run of the date computes the same closing rows again; they must
+    replace that batch's closed partition, not be appended twice."""
+    input_dir, source_dir, wh_dir, write_batch = fixture_dirs
+    job = DailyFraudJob(spark, input_dir, source_dir, wh_dir)
+    job.run()
+    _change_phone(spark, source_dir, "c1", "+71NEW")
+    write_batch("02012024", ["tx9;2024-01-02 09:00:00;card1;PAY;5,00;SUCCESS;t1"], [])
+
+    overwrite = Warehouse.overwrite
+    failed = []
+
+    def failing_swap(self, table, df):
+        if table == "dim_clients_current" and not failed:
+            failed.append(table)
+            raise RuntimeError("injected dim_clients_current swap failure")
+        return overwrite(self, table, df)
+
+    monkeypatch.setattr(Warehouse, "overwrite", failing_swap)
+    with pytest.raises(RuntimeError, match="injected dim_clients_current"):
+        job.run_batch("02012024")
+    # the closing row landed; the current table still holds +71
+    assert job.wh.exists("dim_clients_closed")
+    cur = job.wh.read("dim_clients_current").filter("client_id = 'c1'")
+    assert [r.phone for r in cur.collect()] == ["+71"]
+
+    assert job.run() == ["02012024"]
+    rows = [tuple(r) for r in job.read_dim_history("clients").collect()]
+    assert len(rows) == len(set(rows)) == 4
+    assert _c1_versions(job) == [
         ("+71", "2024-01-01", "2024-01-02", True),
         ("+71NEW", "2024-01-02", "3000-01-01", False),
     ]

@@ -682,3 +682,48 @@ def test_tier_lists_name_existing_tests():
     for tier in (conftest.CORE_TESTS, conftest.SLOW_TESTS):
         names = {entry.split("::")[-1].split("[")[0] for entry in tier}
         assert sorted(names - defined) == []
+
+
+def test_scd2_legs_written_once():
+    """SCD2 has one writer per layout and one copy of each leg: the
+    null-unsafe change predicate (functions/core.py::any_attr_differs),
+    the close-out projection (operators/scd2.py::close_out) and the
+    current-row filter (operators/scd2.py::scd2_current) are each
+    spelled once in the package, and the daily job keeps no second
+    (snapshot) layout. Pure Python: no Spark session."""
+    import glob
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "etl_process_for_fraud_transactions_spark",
+    )
+    legs = {
+        "change predicate": (r'!=\s*F\.col\(f"', ("functions", "core.py")),
+        "close-out projection": (
+            r'F\.lit\(True\)\.alias\("deleted_flg"\)', ("operators", "scd2.py")
+        ),
+        "current filter": (
+            r'F\.col\("deleted_flg"\)\s*==\s*F\.lit\(False\)', ("operators", "scd2.py")
+        ),
+    }
+    sources = {}
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path) as fh:
+            sources[os.path.relpath(path, pkg)] = fh.readlines()
+    for leg, (pattern, home) in legs.items():
+        hits = [
+            f"{rel}:{i}"
+            for rel, lines in sorted(sources.items())
+            for i, line in enumerate(lines, 1)
+            if re.search(pattern, line.split("#", 1)[0])
+        ]
+        assert len(hits) == 1 and hits[0].startswith(os.path.join(*home) + ":"), (leg, hits)
+    jobs = [
+        f"{rel}:{i}: {line.strip()}"
+        for rel, lines in sorted(sources.items())
+        if rel.startswith("jobs" + os.sep)
+        for i, line in enumerate(lines, 1)
+        if re.search(r"scd2_mode|dim_\S*_hist\b", line)
+    ]
+    assert jobs == []

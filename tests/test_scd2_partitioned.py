@@ -48,9 +48,15 @@ def test_partitioned_matches_snapshot(spark, tmp_path):
     assert _snap(part.current()) == _snap(snap.filter("deleted_flg = false"))
 
 
-def test_closed_partition_is_append_only(spark, tmp_path):
-    import os
+def _files(root):
+    return {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, names in os.walk(root)
+        for f in names
+    }
 
+
+def test_closed_partition_is_append_only(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path))
     part = PartitionedScd2(wh, "dim", ["client_id"], ["phone"])
     part.apply_batch(
@@ -61,13 +67,14 @@ def test_closed_partition_is_append_only(spark, tmp_path):
         spark.createDataFrame([("c1", "2")], "client_id string, phone string"),
         F.lit(dt.date(2024, 1, 2)),
     )
-    closed_files = set(os.listdir(wh.path("dim_closed")))
+    closed_files = _files(wh.path("dim_closed"))
     part.apply_batch(
         spark.createDataFrame([("c1", "3")], "client_id string, phone string"),
         F.lit(dt.date(2024, 1, 3)),
     )
-    # batch 3 only ADDED files to the closed partition
-    assert closed_files <= set(os.listdir(wh.path("dim_closed")))
+    # batch 3 only ADDED files (its own date partition) to the closed
+    # table; batch 2's partition is untouched
+    assert closed_files < _files(wh.path("dim_closed"))
     assert part.history().count() == 3
 
 
@@ -80,10 +87,15 @@ def _hist_rows(df):
 
 @pytest.fixture(scope="module")
 def five_batch_jobs(spark, tmp_path_factory):
-    """The full daily job over 5 batch dates in BOTH SCD2 modes
-    (snapshot = reference-exact full rewrite; partitioned = append-only
-    closed + bounded current), run once per module. Returns both jobs
-    plus the report DataFrame each returned for the last batch."""
+    """The full daily job over 5 batch dates, run once per module, next
+    to an independent reference: a fold of the snapshot operator
+    (`scd2_apply`, reference-exact full rewrite) over the same
+    per-batch staging frames, plus `assemble_report` over that fold.
+    The reference's histories and reports live in their own warehouse,
+    written every batch, so their lazy lineage never reads the source
+    files a later batch replaces. Returns the job, the reference
+    warehouse, the report the job returned for the last batch and the
+    last batch date."""
     import shutil
 
     tmp_path = tmp_path_factory.mktemp("five_batch")
@@ -130,12 +142,9 @@ def five_batch_jobs(spark, tmp_path_factory):
         )
         (input_dir / f"passport_blacklist_{date}.csv").write_text("passport,date\n")
 
-    snap = DailyFraudJob(spark, str(input_dir), str(source_dir),
-                         str(tmp_path / "wh_snap"), archive=False,
-                         scd2_mode="snapshot")
-    part = DailyFraudJob(spark, str(input_dir), str(source_dir),
-                         str(tmp_path / "wh_part"), archive=False,
-                         scd2_mode="partitioned")
+    job = DailyFraudJob(spark, str(input_dir), str(source_dir),
+                        str(tmp_path / "wh"), archive=False)
+    ref = Warehouse(spark, str(tmp_path / "wh_ref"))
 
     # phone histories never repeat a prior value per client, so the
     # documented tuple-IN divergence cannot trigger here
@@ -148,53 +157,73 @@ def five_batch_jobs(spark, tmp_path_factory):
     ]
     for i, phones in enumerate(phone_plan):
         date = f"{i + 1:02d}012024"
+        batch = ddmmyyyy_to_date(date)
         write_clients(phones)
         write_batch(date, [
             f"tx{i}a;2024-01-{i + 1:02d} 10:00:00;card0;PAY;10,00;SUCCESS;t1",
             f"tx{i}b;2024-01-{i + 1:02d} 10:30:00;card0;PAY;20,00;SUCCESS;t2",
         ])
-        reports = {"snapshot": snap.run_batch(date), "partitioned": part.run_batch(date)}
-    return snap, part, reports, date
+        for name, (keys, attrs) in DIMENSIONS.items():
+            stg = (job._stage_terminals(date) if name == "terminals"
+                   else job._stage_source_table(name))
+            table = f"dim_{name}_hist"
+            prev = ref.read(table) if ref.exists(table) else None
+            ref.overwrite(table, scd2_apply(prev, stg, keys, attrs, batch))
+        report = job.run_batch(date)
+
+        fact = job.wh.read("fact_transactions")
+        expected = assemble_report(
+            fact.filter(F.col("batch_dt") <= batch).drop("batch_dt"),
+            ref.read("dim_cards_hist"), ref.read("dim_accounts_hist"),
+            ref.read("dim_clients_hist"), ref.read("dim_terminals_hist"),
+            job.wh.read("fact_passport_blacklist"),
+            report_dt=batch,
+        )
+        ref.append_partitioned("rep_fraud", expected, "report_dt")
+        for frame in expected._gate_persists:
+            frame.unpersist()
+    return job, ref, report, date
 
 
-def test_five_batch_daily_job_modes_equivalent(five_batch_jobs):
-    """Dim histories and fraud reports of the two SCD2 modes must agree
-    row for row when attribute tuples don't repeat across versions."""
-    snap, part, _, _ = five_batch_jobs
+def test_five_batch_daily_job_matches_snapshot_operator(five_batch_jobs):
+    """Dim histories and fraud reports of the daily job must agree row
+    for row with the snapshot operator's fold when attribute tuples
+    don't repeat across versions."""
+    job, ref, _, _ = five_batch_jobs
 
-    assert _hist_rows(snap.wh.read("dim_clients_hist")) == _hist_rows(
-        part.read_dim_history("clients")
+    assert _hist_rows(ref.read("dim_clients_hist")) == _hist_rows(
+        job.read_dim_history("clients")
     )
     # every dim agrees, not just clients
     for name in DIMENSIONS:
-        s_rows = sorted(map(tuple, snap.wh.read(f"dim_{name}_hist").collect()))
-        p_rows = sorted(map(tuple, part.read_dim_history(name).collect()))
+        s_rows = sorted(map(tuple, ref.read(f"dim_{name}_hist").collect()))
+        p_rows = sorted(map(tuple, job.read_dim_history(name).collect()))
         assert s_rows == p_rows, name
 
-    rep_s = sorted(map(tuple, snap.wh.read("rep_fraud").collect()))
-    rep_p = sorted(map(tuple, part.wh.read("rep_fraud").collect()))
+    rep_s = sorted(map(tuple, ref.read("rep_fraud").collect()))
+    rep_p = sorted(map(tuple, job.wh.read("rep_fraud").collect()))
     assert rep_s == rep_p
-    # c0's diff-city pairs fire every day in both modes
+    # c0's diff-city pairs fire every day
     assert len(rep_s) > 0
 
 
 def test_current_only_report_matches_full_history_report(five_batch_jobs):
-    """The partitioned job's report reads only the current dimension
-    tables. Its last batch must equal assemble_report over the full
+    """The daily job's report reads only the current dimension tables.
+    Its last batch must equal assemble_report over the full
     current∪closed history on the same inputs. (Equality with the
-    snapshot job's reports, a full-history read, is
-    test_five_batch_daily_job_modes_equivalent's.)"""
-    _, part, reports, date = five_batch_jobs
+    snapshot operator's reports, a full-history read, is
+    test_five_batch_daily_job_matches_snapshot_operator's.)"""
+    job, _, report, date = five_batch_jobs
     # clients have closed versions, so dropping them from the read is
     # load-bearing
-    assert part.wh.exists("dim_clients_closed")
+    assert job.wh.exists("dim_clients_closed")
 
-    dims = {name: part.read_dim_history(name) for name in DIMENSIONS}
+    dims = {name: job.read_dim_history(name) for name in DIMENSIONS}
     batch = ddmmyyyy_to_date(date)
     full = assemble_report(
-        part.wh.read("fact_transactions").drop("batch_dt"),
+        job.wh.read("fact_transactions").drop("batch_dt"),
         dims["cards"], dims["accounts"], dims["clients"], dims["terminals"],
-        part.wh.read("fact_passport_blacklist"),
+        job.wh.read("fact_passport_blacklist"),
         report_dt=batch,
     )
     try:
@@ -203,20 +232,18 @@ def test_current_only_report_matches_full_history_report(five_batch_jobs):
         for frame in full._gate_persists:
             frame.unpersist()
     assert expected
-    assert sorted(map(tuple, reports["partitioned"].collect())) == expected
-    written = part.wh.read("rep_fraud").filter(F.col("report_dt") == batch)
+    assert sorted(map(tuple, report.collect())) == expected
+    written = job.wh.read("rep_fraud").filter(F.col("report_dt") == batch)
     assert sorted(map(tuple, written.select(*full.columns).collect())) == expected
 
 
 def test_daily_report_plan_reads_no_closed_table_and_hints_no_rule_hits(five_batch_jobs):
-    """The report run_batch returns in partitioned mode scans no
-    dim_*_closed table, and none of its broadcast hints sits on a
+    """The report run_batch returns scans no dim_*_closed table, and none of its broadcast hints sits on a
     fact-scaled side: the hinted sides are the dimension and blacklist
     reads, never the rule-hit join-backs, whose hit sets derive from
     the fact and so carry its trans_id."""
-    _, part, reports, _ = five_batch_jobs
-    report = reports["partitioned"]
-    assert part.wh.exists("dim_clients_closed")
+    job, _, report, _ = five_batch_jobs
+    assert job.wh.exists("dim_clients_closed")
     assert [f for f in report.inputFiles() if "_closed" in f] == []
     assert any("dim_clients_current" in f for f in report.inputFiles())
 
@@ -245,8 +272,8 @@ def test_daily_report_plan_reads_no_closed_table_and_hints_no_rule_hits(five_bat
 
 
 def test_tuple_repeat_divergence_documented(spark, tmp_path):
-    """The ONE case the two modes legitimately differ on (documented in
-    operators/scd2_partitioned.py): a key whose attribute tuple repeats
+    """The ONE case the two operators legitimately differ on (documented
+    in operators/scd2_partitioned.py): a key whose attribute tuple repeats
     an older version's tuple. The snapshot operator reproduces the
     reference's tuple-IN close-out (main.py:144-145), which re-stamps
     the coinciding HISTORICAL row too; the partitioned variant closes
