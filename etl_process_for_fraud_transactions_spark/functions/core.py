@@ -19,7 +19,7 @@ from functools import reduce
 from operator import or_
 from typing import Iterable
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 #: SCD2 open-row sentinel used by the reference (main.py:138).
@@ -35,6 +35,14 @@ def ddmmyyyy_to_date(value: str) -> Column:
     """`to_date('{date}','DDMMYYYY')` for a driver-side batch-date string
     (reference main.py:137). Java pattern is lowercase dd/MM/yyyy."""
     return F.to_date(F.lit(value), "ddMMyyyy")
+
+
+def constant_value(spark: SparkSession, col: Column):
+    """Driver-side value of a constant column (e.g. a
+    `ddmmyyyy_to_date` batch date). The optimizer folds it over a
+    one-row inline table, and a local relation collects without a
+    Spark job."""
+    return spark.sql("VALUES (0) AS t(x)").select(col).first()[0]
 
 
 def null_safe_concat_ws(sep: str, *cols: Column | str) -> Column:

@@ -4,13 +4,16 @@ SCD2 x4 -> facts -> five-rule report), per SURVEY.md §3.1.
 
 Differences by design (SURVEY.md §1.3, §2.12):
 - staging is ephemeral DataFrames (no truncate/reload dance);
-- dims are stored by operators.scd2_partitioned: each batch's closed
-  versions go to their own `effective_to` partition by dynamic
-  partition overwrite, and the bounded current table is rewritten
-  atomically; facts are appended with dynamic partition overwrite on
-  the batch date. So re-running a date — also one whose batch failed
-  between a dim's two writes — is idempotent instead of silently
-  duplicating (reference T1/T2);
+- dims are stored by operators.scd2_partitioned: each batch appends
+  the versions it closed to their own `effective_to` partition, skipping
+  keys an earlier attempt at the date already closed there, and the
+  bounded current table is rewritten by temp-dir + swap; facts are
+  appended with dynamic partition overwrite on the batch date. So
+  re-running a date after a failed batch adds no duplicate and loses
+  no closed version (reference T1/T2), also when the source changed in
+  between. Open: a process that dies inside the current table's swap
+  (between its two renames) leaves that table absent, and the re-run
+  re-bootstraps the dimension (ROADMAP aim 3);
 - errors fail fast (the reference swallows staging-cleanup errors and
   keeps going, main.py:52-60 — a defect, not a capability);
 - the four SCD2 applications and the two fact appends write disjoint

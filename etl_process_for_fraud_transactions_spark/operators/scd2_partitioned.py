@@ -9,17 +9,21 @@ exploits the SCD2 state machine: a CLOSED row (deleted_flg=true,
 effective_to != open sentinel) is immutable*, so each dimension is two
 tables:
 
-- `<table>_closed`: partitioned by `effective_to` — each batch writes
-  just the versions it closed into its own date partition, by dynamic
-  partition overwrite, so a re-run of the date replaces that
-  partition instead of appending the same versions twice;
-- `<table>_current`: rewritten atomically — bounded by the live key
-  count, not by history depth.
+- `<table>_closed`: partitioned by `effective_to` — each batch
+  appends just the versions it closed, into its own date partition;
+- `<table>_current`: rewritten by temp-dir + swap — bounded by the
+  live key count, not by history depth.
 
-The closed partition is written before the current table is swapped.
-A batch that dies between the two leaves `_current` on the old rows;
-re-running the date recomputes the same closing rows into the same
-partition, so the history converges without duplicates.
+The closed versions are appended before the current table is swapped,
+and only for keys the batch's partition does not hold yet. That
+partition exists only on a re-run, and only then is it read; the
+check itself is a driver-side directory lookup. So a re-run of a date
+keeps every version an earlier attempt closed and adds no duplicate:
+after a failed swap (`_current` still on the old rows) the same
+closing rows are skipped, and after a later failure in the batch a
+key that changed in between is closed next to them. A key closed
+again by the re-run keeps its first closed version; its interim
+version, open only on the batch date, is replaced by the re-run's.
 
 (*) The reference's tuple-IN close-out (main.py:144-145) can, in a
 pathological case, re-stamp a historical row whose full attribute
@@ -38,6 +42,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 
+from ..functions.core import constant_value
 from ..sources.warehouse import Warehouse
 from .scd2 import changed_rows, close_out, new_versions, scd2_bootstrap
 
@@ -69,9 +74,15 @@ class PartitionedScd2:
 
         all_cols = [*self.keys, *self.attrs]
         changed_keys = changed_rows(d, s, self.keys, self.attrs, self.keys)
-        # newly closed versions -> this batch's closed partition
+        # newly closed versions -> this batch's closed partition, minus
+        # keys an earlier attempt at the same date already closed there
         closing = close_out(cur.join(changed_keys, self.keys, "left_semi"), all_cols, batch_date)
-        self.wh.append_partitioned(self._closed, closing, "effective_to")
+        if self.wh.exists(self._closed):
+            day = constant_value(self.wh.spark, batch_date)
+            done = self.wh.read_partition(self._closed, "effective_to", day)
+            if done is not None:
+                closing = closing.join(done.select(*self.keys), self.keys, "left_anti")
+        self.wh.append(self._closed, closing, ["effective_to"])
 
         # surviving current rows + fresh versions -> rewrite current
         untouched = cur.join(changed_keys, self.keys, "left_anti")
@@ -83,7 +94,8 @@ class PartitionedScd2:
         snapshot operator's output."""
         cur = self.wh.read(self._cur)
         if self.wh.exists(self._closed):
-            return cur.unionByName(self.wh.read(self._closed))
+            # batches that closed nothing append no file to infer from
+            return cur.unionByName(self.wh.read(self._closed, cur.schema))
         return cur
 
     def current(self) -> DataFrame:

@@ -21,6 +21,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def atomic_overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -398,8 +399,31 @@ class Warehouse:
             for f in files
         )
 
-    def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+    def read(self, table: str, schema: StructType | None = None) -> DataFrame:
+        """`schema` skips inference: a table written only by empty
+        appends holds no file to infer it from."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(table))
+
+    def read_partition(self, table: str, column: str, value) -> DataFrame | None:
+        """The rows of partition `column=value` of a table stored
+        partitioned by `column` (read by its directory, so without the
+        partition column), or None when the table has no such partition
+        — a driver-side directory check, no Spark job. Refuses a table
+        with data files at its root: it was written unpartitioned, and a
+        partitioned append would leave a mixed layout that no later read
+        resolves."""
+        root = self.path(table)
+        flat = sorted(f for f in os.listdir(root) if f.startswith("part-") or f.endswith(".parquet"))
+        if flat:
+            raise ValueError(
+                f"{table} holds data files at its root ({flat[0]}, ...): it was "
+                f"written unpartitioned; rewrite it partitioned by {column}"
+            )
+        p = os.path.join(root, f"{column}={value}")
+        if not os.path.isdir(p):
+            return None
+        return self.spark.read.parquet(p)
 
     def overwrite(self, table: str, df: DataFrame) -> None:
         atomic_overwrite(df, self.path(table))
@@ -448,8 +472,13 @@ class Warehouse:
         job) — the broadcast-gate probe (operators/tombstones.py)."""
         return table_bytes_path(self.path(table))
 
-    def append(self, table: str, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self.path(table))
+    def append(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
+        """Plain append: existing files, also those of the partitions
+        present in `df`, stay — so `df` may read `table` lazily."""
+        writer = df.write.mode("append")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(self.path(table))
 
     def append_partitioned(
         self, table: str, df: DataFrame, partition_col: str | list[str]

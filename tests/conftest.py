@@ -106,7 +106,8 @@ CORE_TESTS = {
     "test_neardup_compact_watermark_and_asof_refusal",
     # the daily batch: a failing write in the concurrent wave neither
     # archives nor reports; a re-run after a failed current-table swap
-    # keeps one closed version; the dim histories and the current-only,
+    # keeps one closed version, and a re-run after a later write failed
+    # keeps every closed version; the dim histories and the current-only,
     # AQE-planned report match a scd2_apply + assemble_report reference
     # and the report over full history, and the report's plan scans no
     # closed table and hints no rule-hit join-back (the last three share
@@ -114,6 +115,7 @@ CORE_TESTS = {
     # frames run_batch releases
     "test_failing_write_in_the_wave_keeps_inputs_and_skips_report",
     "test_rerun_after_current_swap_fails_keeps_one_closed_version",
+    "test_rerun_after_later_wave_failure_keeps_every_closed_version",
     "test_five_batch_daily_job_matches_snapshot_operator",
     "test_current_only_report_matches_full_history_report",
     "test_daily_report_plan_reads_no_closed_table_and_hints_no_rule_hits",

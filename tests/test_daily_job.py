@@ -214,7 +214,7 @@ def test_rerun_after_current_swap_fails_keeps_one_closed_version(
     """A dim's closing rows are written before its current table is
     swapped. If the swap fails, `_current` keeps the old rows and a
     re-run of the date computes the same closing rows again; they must
-    replace that batch's closed partition, not be appended twice."""
+    not be appended twice."""
     input_dir, source_dir, wh_dir, write_batch = fixture_dirs
     job = DailyFraudJob(spark, input_dir, source_dir, wh_dir)
     job.run()
@@ -244,4 +244,49 @@ def test_rerun_after_current_swap_fails_keeps_one_closed_version(
     assert _c1_versions(job) == [
         ("+71", "2024-01-01", "2024-01-02", True),
         ("+71NEW", "2024-01-02", "3000-01-01", False),
+    ]
+
+
+def test_rerun_after_later_wave_failure_keeps_every_closed_version(
+    spark, fixture_dirs, monkeypatch
+):
+    """The clients dim completes its batch (closed rows and swap), but
+    a fact write in the same wave fails, so the date is re-run — after
+    another client changed in the source. The re-run closes that
+    client's old version next to the one the first attempt closed; no
+    closed version may be lost or written twice."""
+    input_dir, source_dir, wh_dir, write_batch = fixture_dirs
+    job = DailyFraudJob(spark, input_dir, source_dir, wh_dir)
+    job.run()
+    _change_phone(spark, source_dir, "c1", "+71NEW")
+    write_batch("02012024", ["tx9;2024-01-02 09:00:00;card1;PAY;5,00;SUCCESS;t1"], [])
+
+    append_partitioned = Warehouse.append_partitioned
+    failed = []
+
+    def failing_fact(self, table, df, partition_col):
+        if table == "fact_transactions" and not failed:
+            failed.append(table)
+            raise RuntimeError("injected fact_transactions failure")
+        return append_partitioned(self, table, df, partition_col)
+
+    monkeypatch.setattr(Warehouse, "append_partitioned", failing_fact)
+    with pytest.raises(RuntimeError, match="injected fact_transactions"):
+        job.run_batch("02012024")
+    cur = job.wh.read("dim_clients_current").filter("client_id = 'c1'")
+    assert [r.phone for r in cur.collect()] == ["+71NEW"]
+
+    _change_phone(spark, source_dir, "c2", "+72NEW")
+    assert job.run() == ["02012024"]
+    history = job.read_dim_history("clients")
+    rows = [tuple(r) for r in history.collect()]
+    assert len(rows) == len(set(rows)) == 5
+    assert sorted(
+        (r.client_id, r.phone, str(r.effective_from), str(r.effective_to), r.deleted_flg)
+        for r in history.filter("client_id IN ('c1', 'c2')").collect()
+    ) == [
+        ("c1", "+71", "2024-01-01", "2024-01-02", True),
+        ("c1", "+71NEW", "2024-01-02", "3000-01-01", False),
+        ("c2", "+72", "2024-01-01", "2024-01-02", True),
+        ("c2", "+72NEW", "2024-01-02", "3000-01-01", False),
     ]

@@ -78,6 +78,26 @@ def test_closed_partition_is_append_only(spark, tmp_path):
     assert part.history().count() == 3
 
 
+def test_unpartitioned_closed_table_is_refused_before_any_write(spark, tmp_path):
+    """A `_closed` table with data files at its root (written flat) is
+    refused before the batch writes anything: appending partitions next
+    to those files would leave a layout no later read resolves."""
+    wh = Warehouse(spark, str(tmp_path))
+    part = PartitionedScd2(wh, "dim", ["client_id"], ["phone"])
+    part.apply_batch(
+        spark.createDataFrame([("c1", "1")], "client_id string, phone string"),
+        F.lit(dt.date(2024, 1, 1)),
+    )
+    wh.append("dim_closed", wh.read("dim_current").limit(0))
+    before = _files(str(tmp_path))
+    with pytest.raises(ValueError, match="written unpartitioned"):
+        part.apply_batch(
+            spark.createDataFrame([("c1", "2")], "client_id string, phone string"),
+            F.lit(dt.date(2024, 1, 2)),
+        )
+    assert _files(str(tmp_path)) == before
+
+
 def _hist_rows(df):
     return sorted(
         (r.client_id, r.phone, str(r.effective_from), str(r.effective_to), r.deleted_flg)
